@@ -629,7 +629,9 @@ def build_index(
 _DATASET_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _dataset_mtimes(path: str) -> tuple:
+def _dataset_mtimes(path: str) -> tuple | None:
+    """The dataset's listing fingerprint, or None when ``os.stat`` /
+    ``os.listdir`` cannot see it (object stores, permissions)."""
     try:
         entries = [(path, os.stat(path).st_mtime_ns)]
         for e in sorted(os.listdir(path)):
@@ -637,11 +639,16 @@ def _dataset_mtimes(path: str) -> tuple:
             entries.append((e, os.stat(p).st_mtime_ns))
         return tuple(entries)
     except OSError:
-        return ("missing",)
+        return None
 
 
 def _read_dataset(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path, _dataset_mtimes(path))
+    mtimes = _dataset_mtimes(path)
+    if mtimes is None:
+        # no fingerprint can tell a rebuild at this path from the cached
+        # listing, so every call lists afresh
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path, mtimes)
     df = _DATASET_CACHE.get(key)
     if df is None:
         # drop stale entries for the same path (old mtimes) to bound growth

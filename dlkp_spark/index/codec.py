@@ -121,16 +121,13 @@ def varbyte_decode_concat(buffers) -> tuple[np.ndarray, np.ndarray]:
     return out, counts
 
 
-def decode_postings_batch(docs_vbs, tfs_vbs, dls_vbs) -> tuple[
-        np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Batched :func:`decode_postings` over aligned blob sequences.
+def decode_docs_batch(docs_vbs) -> tuple[np.ndarray, np.ndarray]:
+    """Batched doc-id decode of many delta+varbyte blobs → flat (doc_ids
+    int64, counts int64), laid out as in :func:`decode_postings_batch`.
 
-    Returns flat (doc_ids int64, tfs int64, dls int64, counts int64);
-    list ``i`` occupies the slice ``[offsets[i], offsets[i]+counts[i])``
-    with ``offsets = concatenate(([0], cumsum(counts)[:-1]))``. Per-list
-    values are bit-identical to decode_postings (pytest-pinned): the
-    delta decode runs as one global cumsum with each list's prefix offset
-    subtracted — integer arithmetic, no reassociation.
+    The delta decode runs as one global cumsum with each list's prefix
+    offset subtracted — integer arithmetic, so every list is bit-identical
+    to ``delta_decode(varbyte_decode(blob))``.
     """
     gaps, counts = varbyte_decode_concat(docs_vbs)
     cs = np.cumsum(gaps.astype(np.int64))
@@ -142,7 +139,19 @@ def decode_postings_batch(docs_vbs, tfs_vbs, dls_vbs) -> tuple[
     offsets = np.zeros(len(starts), dtype=np.int64)
     np.copyto(offsets, cs[starts - 1] if cs.size else offsets,
               where=starts > 0)
-    docs = cs - np.repeat(offsets, counts)
+    return cs - np.repeat(offsets, counts), counts
+
+
+def decode_postings_batch(docs_vbs, tfs_vbs, dls_vbs) -> tuple[
+        np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Batched :func:`decode_postings` over aligned blob sequences.
+
+    Returns flat (doc_ids int64, tfs int64, dls int64, counts int64);
+    list ``i`` occupies the slice ``[offsets[i], offsets[i]+counts[i])``
+    with ``offsets = concatenate(([0], cumsum(counts)[:-1]))``. Per-list
+    values are bit-identical to decode_postings (pytest-pinned).
+    """
+    docs, counts = decode_docs_batch(docs_vbs)
     tfs, c2 = varbyte_decode_concat(tfs_vbs)
     dls, c3 = varbyte_decode_concat(dls_vbs)
     assert np.array_equal(counts, c2) and np.array_equal(counts, c3), \

@@ -1,40 +1,51 @@
-"""Block-max WAND document-at-a-time BM25 over the compressed index.
+"""Block-max WAND / TAAT BM25 top-k over the compressed index.
 
-North-star query path: broadcast query terms join the posting table,
-``groupBy(query_id, segment).applyInPandas`` runs the exact top-k kernel
-per doc-range segment — adaptive between block-max WAND (per-partition
-DAAT with a size-k heap; pays on long lists) and dense vectorized TAAT
-(pays on small segment slices; see ``exact_topk_lists``) — and partial
-top-k heaps merge — either relationally (window over the tiny candidate
-set) or via ``RDD.treeAggregate`` (the treeReduce heap merge of
-SURVEY.md §2.5 A6, analog of the reference's DistributedTensorGatherer at
-/root/reference/src/dlkp/extraction/trainer.py:53-75).
+Every call is built from three shared pieces:
+
+- one driver prep (``_prep``): stats, parsed queries and boost weights,
+  the term set, and the posting rows broadcast-joined to it;
+- one per-segment kernel (``_make_batch_kernel`` via ``_score``): each
+  posting row decodes once per doc-range segment, filter / delete /
+  MUST_NOT masks drop postings before scoring, list builders (plain,
+  synonym, DisMax) make each query's lists, and the exact top-k dispatch
+  (dense or sparse TAAT, match-gated TAAT, block-max WAND) or an emitter
+  (collapse, explain) turns them into rows; counting has its own
+  doc-id-only kernel (``_counts``);
+- one final rank merge (``_rank``) over the ≤ k partial rows per
+  (query, segment), or the treeReduce heap merge of SURVEY.md §2.5 A6
+  (``wand_topk_treereduce``).
 
 Determinism: scores accumulate per doc in (term asc, field asc) order with
-the same float64 expression order as the oracle (dlkp_spark.oracle), so
-top-k results are bit-identical, tie-broken (score desc, doc_id asc).
-
-Scale shape: a query touches only its terms' posting rows (broadcast hash
-join, predicate pushdown on term). Work parallelizes over (query, segment)
-pairs — at 10^12 docs a single query fans out over n_docs/segment_docs
-segment tasks; the merge moves only k rows per segment.
+the oracle's float64 expression order (dlkp_spark.oracle), so top-k
+results are bit-identical, tie-broken (score desc, doc_id asc).
 """
 
 from __future__ import annotations
 
 import heapq
+import operator
+import re
 from collections.abc import Iterable
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dlkp_spark.config import FIELD_KP, BM25Params
+from dlkp_spark.cache import persist
+from dlkp_spark.config import FIELD_BODY, FIELD_KP, BM25Params
 from dlkp_spark.index.build import load_attrs, load_postings, load_stats
-from dlkp_spark.index.codec import (decode_postings_batch, delta_decode,
-                                    varbyte_decode)
+from dlkp_spark.index.codec import (decode_docs_batch, decode_postings_batch,
+                                    tf_norm_vec)
 from dlkp_spark.oracle import idf as idf_fn
+
+_TOPK = "query_id long, rank int, doc_id long, score double"
+_PARTIALS = "query_id long, doc_id long, score double"
+_EXPLAIN = ("query_id long, doc_id long, term string, field int, "
+            "tf long, df long, contribution double")
+_DTYPES = {"long": "int64", "int": "int32", "double": "float64",
+           "string": "object"}
 
 
 class _List:
@@ -61,9 +72,6 @@ class _List:
         """Move cursor to first doc >= target (galloping via searchsorted)."""
         if self.pos < self.n and self.docs[self.pos] < target:
             self.pos += int(np.searchsorted(self.docs[self.pos:], target, side="left"))
-
-    def block_idx(self, block_size: int) -> int:
-        return self.pos // block_size
 
     def block_ub(self, block_size: int) -> float:
         return self.boost * float(self.block_max[self.pos // block_size])
@@ -156,39 +164,29 @@ def bmw_topk_lists(lists: list[dict], k: int, block_size: int) -> list[tuple[int
     return [(-nd, s) for s, nd in out]
 
 
-# doc-span ceiling for the dense exact kernel: above this the accumulator
-# buffer stops being cache/memory-friendly and list lengths are where
-# block-max pruning starts paying. Worst case at the cap is a 32 MB
-# float64 buffer (8 B × 2^22 docs) per concurrently-running kernel task —
-# bounded and deliberate: the width of a (query, segment) group is capped
-# by the index's ``segment_docs`` (doc-range segmentation, build.py), so
-# with the default IndexConfig.segment_docs (2^11..2^13 in this repo) the
-# dense path allocates KBs, and only an index built with multi-million-doc
-# segments (or a deeply compacted one — merge_segments multiplies
-# segment_docs by ``factor``) ever approaches the cap, at which point the
-# adaptive dispatch flips to BMW / sparse TAAT instead of allocating
-# beyond it.
+# doc-span cap of the dense exact kernel: at most a 32 MB float64 buffer
+# per running task. Segment width is bounded by ``segment_docs`` (KBs at
+# the defaults); only multi-million-doc or deeply compacted segments reach
+# the cap, where dispatch flips to BMW / sparse TAAT instead.
 _DENSE_MAX_WIDTH = 1 << 22
+
+
+def _densify(lists: list[dict], base: int) -> list[dict]:
+    """Attach the dense-TAAT scatter arrays: ``cols`` (docs - base) and
+    ``vals`` (boost × contribs)."""
+    for lst in lists:
+        lst["cols"] = (lst["docs"] - base).astype(np.int64)
+        lst["vals"] = lst["boost"] * lst["contribs"]
+    return lists
 
 
 def exact_topk_lists(lists: list[dict], k: int, block_size: int,
                      dense_max_width: int = _DENSE_MAX_WIDTH) -> list[tuple[int, float]]:
-    """Adaptive exact top-k over one query's decoded lists in one segment.
-
-    Both kernels are EXACT and bit-identical (same per-doc float-add order,
-    same tie-break; pinned by tests/test_wand_kernel.py) — this only picks
-    the faster one, the way Lucene chooses between BMW and exhaustive
-    scoring per clause:
-
-    - segment doc-span small (the common case: doc-range segments bound
-      width by segment_docs) → dense vectorized TAAT; the Python DAAT
-      pivot loop costs ~40× more than numpy scatter on short lists
-      (measured 0.80 s vs 0.02 s over the bench's 200 query×segment
-      groups).
-    - doc-span large (huge segments / long posting lists) → block-max
-      WAND (Ding & Suel), where skipping whole blocks beats touching
-      every posting.
-    """
+    """Adaptive exact top-k over one query's lists in one segment: dense
+    TAAT when the doc span fits ``dense_max_width`` (numpy scatter beats the
+    Python pivot loop on short lists), else block-max WAND (Ding & Suel),
+    where skipping whole blocks beats touching every posting. Both are exact
+    and bit-identical (tests/test_wand_kernel.py)."""
     lists = [lst for lst in lists if len(lst["docs"])]
     if not lists:
         return []
@@ -196,12 +194,8 @@ def exact_topk_lists(lists: list[dict], k: int, block_size: int,
     width = max(int(lst["docs"][-1]) for lst in lists) - base + 1
     if width > dense_max_width:
         return bmw_topk_lists(lists, k, block_size)
-    q_lists = sorted(lists, key=lambda d: (d["term"], d["field"]))
-    for lst in q_lists:
-        lst["cols"] = (lst["docs"] - base).astype(np.int64)
-        lst["vals"] = lst["boost"] * lst["contribs"]
-    acc = np.zeros(width, dtype=np.float64)
-    return _taat_topk_dense(q_lists, acc, base, k)
+    q_lists = _densify(sorted(lists, key=lambda d: (d["term"], d["field"])), base)
+    return _taat_topk_dense(q_lists, np.zeros(width, dtype=np.float64), base, k)
 
 
 def merge_topk(partials: Iterable[tuple[int, float]], k: int) -> list[tuple[int, float]]:
@@ -210,18 +204,12 @@ def merge_topk(partials: Iterable[tuple[int, float]], k: int) -> list[tuple[int,
 
 
 def _decode_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> list[dict]:
-    """Decode every posting row of one group in ONE batched codec pass.
-
-    The varbyte/delta decode of all rows runs as a single vectorized pass
-    over the concatenated blobs (codec.decode_postings_batch — per-row
-    calls cost ~0.2 ms each in numpy overhead alone), and the BM25
-    contributions are computed flat with per-row idf/avgdl repeated to
-    posting granularity; per-element float expressions are unchanged, so
-    per-list values stay bit-identical to row-at-a-time decode
-    (tests/test_codec.py pins both).
-    """
-    n = len(g)
-    if n == 0:
+    """Decode every posting row of a segment group in ONE batched codec
+    pass, with BM25 contributions computed flat in ``tf_norm_vec``'s
+    expression order — per-list values are bit-identical to row-at-a-time
+    decode (tests/test_codec.py). Raw ``tfs``/``dls`` and the row ``df`` ride
+    along for the synonym builder and the explain emitter."""
+    if not len(g):
         return []
     docs_f, tfs_f, dls_f, counts = decode_postings_batch(
         g["docs_vb"].tolist(), g["tfs_vb"].tolist(), g["dls_vb"].tolist())
@@ -229,79 +217,68 @@ def _decode_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> list[dict]:
     dfv = g["df"].to_numpy()
     idfs = np.array([idf_fn(stats["n_docs"], int(d)) for d in dfv])
     avgdls = np.array([stats["avgdl"][int(f)] for f in fields])
-    tff = tfs_f.astype(np.float64)
-    dlf = dls_f.astype(np.float64)
-    rep_avg = np.repeat(avgdls, counts)
-    # same expression order as tf_norm_vec, element-wise scalar→array
-    tfn = (tff * (p.k1 + 1.0)) / (tff + p.k1 * (1.0 - p.b + p.b * dlf / rep_avg))
-    contribs_f = np.repeat(idfs, counts) * tfn
+    contribs_f = np.repeat(idfs, counts) * tf_norm_vec(
+        tfs_f.astype(np.float64), dls_f.astype(np.float64),
+        np.repeat(avgdls, counts), p)
     offsets = np.concatenate(([0], np.cumsum(counts)))
-    terms = g["term"].to_numpy()
-    bmax = g["block_max"].to_numpy()
-    blast = g["block_last"].to_numpy()
     lists = []
-    for i in range(n):
+    for i, (term, f, df, bmax, blast) in enumerate(zip(
+            g["term"], fields, dfv, g["block_max"], g["block_last"])):
         s, e = offsets[i], offsets[i + 1]
         lists.append({
-            "term": terms[i], "field": int(fields[i]),
-            "boost": p.kp_boost if int(fields[i]) == FIELD_KP else 1.0,
+            "term": term, "field": int(f), "df": int(df),
+            "boost": p.kp_boost if int(f) == FIELD_KP else 1.0,
             "docs": docs_f[s:e], "contribs": contribs_f[s:e],
-            "block_max": np.asarray(bmax[i], dtype=np.float64),
-            "block_last": np.asarray(blast[i], dtype=np.int64),
+            "tfs": tfs_f[s:e], "dls": dls_f[s:e],
+            "block_max": np.asarray(bmax, dtype=np.float64),
+            "block_last": np.asarray(blast, dtype=np.int64),
         })
     return lists
 
 
-def wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[tuple[int, list[str]]],
-    p: BM25Params | None = None,
-    k: int | None = None,
-) -> DataFrame:
-    """Top-k over the compressed index → (query_id, rank, doc_id, score).
-
-    Latency-oriented entry point; since r6 it executes on the shared
-    segment-grouped batch kernel (``batch_topk``): each (term, segment)
-    posting row ships and decodes ONCE per segment and every query scores
-    against the shared decoded lists with the per-query BMW/dense exact
-    kernels. The former per-(query, segment) grouping replicated and
-    re-decoded a posting row for every query touching its term and paid a
-    separate partial-merge window — measured 1.5 s → 0.9 s for the
-    20-query latency set (13 → ~22 q/s) with bit-identical results
-    (tests/test_rank_identity.py pins both paths to the same oracle).
-    For sub-query-latency services, ``wand_topk_treereduce`` remains the
-    single-query heap-merge path.
-    """
-    return batch_topk(spark, index_dir, queries, p, k)
+def _doc_lists(blobs) -> list[np.ndarray]:
+    """Decode doc-id blobs in one batched pass → one int64 array each."""
+    docs, counts = decode_docs_batch(list(blobs))
+    return np.split(docs, np.cumsum(counts)[:-1]) if len(counts) else []
 
 
-def _taat_topk(lists: list[dict], k: int,
-               cursor: tuple[float, int] | None = None) -> list[tuple[int, float]]:
-    """Vectorized term-at-a-time exact scoring for one query × segment.
+def _value_docs(rows) -> list[tuple[str, np.ndarray]]:
+    """A segment's (value, docs_vb) attribute rows → [(value, doc ids)]."""
+    rows = [] if rows is None else list(rows)
+    return list(zip([r["value"] for r in rows],
+                    _doc_lists(r["docs_vb"] for r in rows)))
 
-    Lists must be sorted by (term, field); ``np.add.at`` then accumulates
-    per-doc contributions in exactly the oracle's float order (term asc,
-    body before kp), so scores stay bit-identical to the WAND/oracle paths.
 
-    ``cursor=(score, doc_id)`` applies Lucene searchAfter semantics: only
-    docs strictly after the cursor in (score desc, doc_id asc) order are
-    eligible — scores are unchanged, the cursor only gates selection.
-
-    This is the reference kernel shape; the batch path uses the dense
-    per-segment variant in ``_taat_topk_dense`` (bit-identical, measured
-    2.2× faster at 2000 queries — tests/test_wand_kernel.py pins identity).
-    """
-    if not lists:
-        return []
+def _accumulate(lists: list[dict]) -> tuple[np.ndarray, np.ndarray]:
+    """Sparse TAAT accumulation → (docs asc, scores). ``np.add.at`` adds
+    each doc's contributions in the lists' order — the caller fixes the
+    float order: (term asc, field asc), or clause order for pseudo-lists."""
     docs = np.concatenate([lst["docs"] for lst in lists])
     contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in lists])
     uniq, inv = np.unique(docs, return_inverse=True)
     acc = np.zeros(len(uniq), dtype=np.float64)
     np.add.at(acc, inv, contribs)
+    return uniq, acc
+
+
+def _after(scores: np.ndarray, docs: np.ndarray, cursor: tuple[float, int]) -> np.ndarray:
+    """searchAfter mask: docs strictly after ``cursor`` in (score desc,
+    doc_id asc) order."""
+    s_a, d_a = cursor
+    return (scores < s_a) | ((scores == s_a) & (docs > d_a))
+
+
+def _taat_topk(lists: list[dict], k: int,
+               cursor: tuple[float, int] | None = None) -> list[tuple[int, float]]:
+    """Sparse exact TAAT for one query × segment, in the caller's list
+    order (``_accumulate``). ``cursor=(score, doc_id)`` applies Lucene
+    searchAfter: only docs strictly after it in (score desc, doc_id asc)
+    order are eligible; scores are unchanged."""
+    if not lists:
+        return []
+    uniq, acc = _accumulate(lists)
     if cursor is not None:
-        s_a, d_a = cursor
-        keep = (acc < s_a) | ((acc == s_a) & (uniq > d_a))
+        keep = _after(acc, uniq, cursor)
         uniq, acc = uniq[keep], acc[keep]
     order = np.lexsort((uniq, -acc))[:k]
     return [(int(uniq[i]), float(acc[i])) for i in order]
@@ -309,26 +286,15 @@ def _taat_topk(lists: list[dict], k: int,
 
 def _taat_conjunctive(q_lists: list[dict], need: int, k: int,
                       cursor: tuple[float, int] | None = None) -> list[tuple[int, float]]:
-    """Exact match-count-gated top-k for one query over one segment.
-
-    Only docs matched by at least ``need`` distinct query terms are ranked
-    (a term counts as matched via either field) — ``need`` = the query's
-    term count for conjunctive AND, or a smaller Lucene-style
-    minimum-should-match. Scores are the same BM25 sums in the same
-    (term asc, field asc) float order as ``_taat_topk``, so results are
-    bit-identical to the disjunctive scores of the surviving docs. Correct
-    per segment because doc-range segmentation puts ALL of a doc's
-    postings (every term, every field) in one segment.
-
-    ``q_lists`` must be sorted by (term, field) — the kernel's order.
-    """
+    """Exact top-k of the docs matched by ≥ ``need`` distinct query terms
+    (either field) — ``need`` = the term count for AND, or a smaller
+    minimum-should-match. Scores are ``_taat_topk``'s sums in the same
+    order, so survivors score bit-identically. Exact per segment because
+    doc-range segmentation puts all of a doc's postings in one segment.
+    ``q_lists`` must be sorted by (term, field)."""
     if not q_lists or need <= 0:
         return []
-    docs = np.concatenate([lst["docs"] for lst in q_lists])
-    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in q_lists])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, contribs)
+    uniq, acc = _accumulate(q_lists)
     cnt = np.zeros(len(uniq), dtype=np.int32)
     i = 0
     while i < len(q_lists):
@@ -341,9 +307,7 @@ def _taat_conjunctive(q_lists: list[dict], need: int, k: int,
         i = j
     cand = np.flatnonzero(cnt >= need)
     if cursor is not None and len(cand):
-        s_a, d_a = cursor
-        ca, cu = acc[cand], uniq[cand]
-        cand = cand[(ca < s_a) | ((ca == s_a) & (cu > d_a))]
+        cand = cand[_after(acc[cand], uniq[cand], cursor)]
     if not len(cand):
         return []
     order = np.lexsort((uniq[cand], -acc[cand]))[:k]
@@ -353,35 +317,15 @@ def _taat_conjunctive(q_lists: list[dict], need: int, k: int,
 def _taat_topk_dense(q_lists: list[dict], acc: np.ndarray, base: int,
                      k: int,
                      cursor: tuple[float, int] | None = None) -> list[tuple[int, float]]:
-    """Dense-accumulator exact TAAT for one query over one segment.
-
-    Replaces the sort-based ``np.unique`` + ``np.add.at`` accumulation with
-    direct fancy ``+=`` into a segment-width float buffer: doc ids within a
-    segment are a bounded contiguous range (doc_id // segment_docs is the
-    segment key, build.py), so ``doc - base`` indexes a cache-resident
-    array and each list's docs are unique within the list, making direct
-    scatter legal. Accumulation still runs list-by-list in (term asc,
-    field asc) order — the same float-add sequence per doc as
-    ``_taat_topk`` and the oracle, so scores stay bit-identical.
-
-    Lists must carry precomputed ``cols`` (docs - base) and ``vals``
-    (boost * contribs). ``acc`` is the caller's reusable buffer.
-
-    Top-k selection: O(width) ``np.partition`` for the kth score, then the
-    boundary-tie-complete candidate set lexsorted by (score desc, doc asc)
-    — identical tie handling to the full lexsort it replaces.
-
-    Why no block-max pruning here (round-3 verdict #4 asked; measured +
-    argued instead): once accumulation costs O(1) per posting with no
-    sort, ANY per-posting prune test costs at least as much as the add it
-    would skip, and a block-granularity prune (range-add difference
-    array + cumsum for upper bounds) still needs a per-query exact seed
-    threshold whose computation touches the same postings. Pruning pays
-    where per-posting work is avoidable — the per-query DAAT path
-    (``bmw_topk_lists``) already does Ding & Suel block-max skipping. A
-    matrix-across-queries variant was also measured: 2.1× SLOWER than
-    this shape (2D scatter misses cache; see BASELINE.md round-4 notes).
-    """
+    """Dense-accumulator exact TAAT for one query over one segment: direct
+    fancy ``+=`` into the caller's reusable segment-width buffer ``acc``
+    (segment doc ids are a bounded contiguous range and each list's docs are
+    unique, so ``doc - base`` scatter is legal). Lists add in the caller's
+    order — the same per-doc float sequence as ``_taat_topk`` — and need
+    ``cols``/``vals`` (``_densify``). Selection: ``np.partition`` for the kth
+    score, then the tie-complete candidate set lexsorted (score desc, doc
+    asc). No block-max pruning: at O(1) per posting a prune test costs as
+    much as the add it skips; block skipping lives in ``bmw_topk_lists``."""
     if not q_lists:
         return []
     acc.fill(0.0)
@@ -407,15 +351,11 @@ def _taat_topk_dense(q_lists: list[dict], acc: np.ndarray, base: int,
 
 
 def _parse_boosts(queries) -> tuple[list[tuple[int, list[str]]], dict]:
-    """Lucene query-boost syntax: a term ``"spark^2.5"`` weights that
-    term's contribution by 2.5 for that query. Returns (clean queries,
-    {(qid, term): weight}) with weights validated > 0.
-
-    Conflicting boosts for one term within one query (``"spark^2"`` plus
-    ``"spark^3"``, or a boosted term repeated bare) raise: the engine
-    dedups terms per query, so last-write-wins would silently score a
-    different query than Lucene (which keeps separate clauses). Exact
-    repeats (same term, same weight) stay allowed."""
+    """Lucene boosts: ``"spark^2.5"`` weights that term by 2.5 for that
+    query → (clean queries, {(qid, term): weight}), weights > 0. Conflicting
+    boosts for one term in one query raise (terms are deduped per query, so
+    last-write-wins would score a different query than Lucene); exact
+    repeats are allowed."""
     clean, weights = [], {}
     for qid, terms in queries:
         bare, seen = [], {}
@@ -440,16 +380,10 @@ def _parse_boosts(queries) -> tuple[list[tuple[int, list[str]]], dict]:
 
 
 def _weight_list(lst: dict, w: float) -> dict:
-    """A query-weighted copy of a decoded posting list.
-
-    Contribution order is ``(boost × contrib) × w`` — the same grouping in
-    every kernel and in the SQL oracle, so weighted scores stay
-    bit-consistent across the dense/TAAT/BMW paths (float multiply is
-    commutative but NOT associative; the grouping must be fixed). boost
-    folds to 1.0 (multiplying by the literal 1.0 afterwards is exact), and
-    block-max bounds scale by the same positive factor, so BMW pruning
-    stays admissible and exact.
-    """
+    """A query-weighted copy of a decoded list. Contributions are
+    ``(boost × contrib) × w`` — the grouping every kernel and the SQL oracle
+    use (float multiply is not associative) — and block-max bounds scale by
+    the same positive factor, so BMW pruning stays admissible and exact."""
     new = dict(lst)
     new["contribs"] = (lst["boost"] * lst["contribs"]) * w
     new["block_max"] = (lst["boost"] * lst["block_max"]) * w
@@ -460,15 +394,12 @@ def _weight_list(lst: dict, w: float) -> dict:
 
 
 def _allowed_docs(flt_rows, filter_attrs: list[str]) -> np.ndarray:
-    """Decode a segment's attribute blobs → allowed doc-id set.
-
-    Semantics match SQL ``WHERE a IN (v1, v2) AND b IN (...)``: union of
-    doc lists across a filter's values, intersection across attributes; an
-    attribute with no row in this segment allows nothing.
-    """
+    """A segment's filter rows → allowed doc ids: SQL ``a IN (...) AND b IN
+    (...)`` — union over a filter's values, intersection across attributes;
+    an attribute with no row in the segment allows nothing."""
+    flt_rows = list(flt_rows)
     per_attr: dict[str, np.ndarray] = {}
-    for r in flt_rows:
-        ids = delta_decode(varbyte_decode(r["docs_vb"]).astype(np.int64))
+    for r, ids in zip(flt_rows, _doc_lists(r["docs_vb"] for r in flt_rows)):
         a = r["attr"]
         per_attr[a] = np.union1d(per_attr[a], ids) if a in per_attr else ids
     allowed: np.ndarray | None = None
@@ -482,14 +413,9 @@ def _allowed_docs(flt_rows, filter_attrs: list[str]) -> np.ndarray:
 
 def _mask_lists(lists: list[dict], masks: list[np.ndarray],
                 block_size: int) -> list[dict]:
-    """Drop postings where mask is False, rebuilding block-max metadata.
-
-    Masking happens BEFORE any kernel — per-doc BM25 contributions are
-    independent, so dropping postings of excluded docs leaves every
-    surviving doc's score bit-identical. Block-max metadata is rebuilt from
-    the surviving contributions (the original block boundaries no longer
-    align), keeping BMW pruning exact for the per-query fallback path.
-    """
+    """Drop postings where mask is False. Per-doc contributions are
+    independent, so survivors keep bit-identical scores; block-max metadata
+    is rebuilt from the surviving contributions so BMW stays exact."""
     out = []
     for lst, mask in zip(lists, masks):
         if mask.all():
@@ -526,6 +452,97 @@ def _apply_doc_deletes(lists: list[dict], deleted: np.ndarray,
         lists, [~np.isin(lst["docs"], deleted) for lst in lists], block_size)
 
 
+def _synonym_lists(qid, clauses, by_term, fields, clause_df, stats, p) -> list[dict]:
+    """Synonym list builder: one pseudo-list per (clause, field), in
+    clause order — tf = Σ member tfs per doc, idf from the clause's
+    global max df (``synonym_topk``)."""
+    out = []
+    for cl in clauses:
+        for f in fields:
+            parts = [lst for t in cl for lst in by_term.get(t, ()) if lst["field"] == f]
+            if not parts:
+                continue
+            if len(parts) == 1:
+                u, tf_sum, dl_u = parts[0]["docs"], parts[0]["tfs"], parts[0]["dls"]
+            else:
+                u, inv = np.unique(np.concatenate([pt["docs"] for pt in parts]),
+                                   return_inverse=True)
+                tf_sum = np.zeros(len(u), dtype=np.int64)
+                np.add.at(tf_sum, inv, np.concatenate([pt["tfs"] for pt in parts]))
+                # dl is a (doc, field) property — every member carries the
+                # same value, any write wins
+                dl_u = np.zeros(len(u), dtype=np.int64)
+                dl_u[inv] = np.concatenate([pt["dls"] for pt in parts])
+            tfn = tf_norm_vec(tf_sum.astype(np.float64), dl_u.astype(np.float64),
+                              stats["avgdl"][f], p)
+            out.append({"docs": u,
+                        "contribs": idf_fn(stats["n_docs"], clause_df[(cl, f)]) * tfn,
+                        "boost": p.kp_boost if f == FIELD_KP else 1.0})
+    return out
+
+
+def _dismax_lists(qid, terms, by_term, tie: float) -> list[dict]:
+    """DisMax list builder: per term, its body and kp lists combine as
+    ``max + tie × min`` of the boosted contributions (``dismax_topk``)."""
+    out = []
+    for t in terms:
+        fl = by_term.get(t, [])
+        if len(fl) == 2:
+            b, kp = fl
+            u = np.union1d(b["docs"], kp["docs"])
+            cb = np.zeros(len(u), dtype=np.float64)
+            ck = np.zeros(len(u), dtype=np.float64)
+            cb[np.searchsorted(u, b["docs"])] = b["boost"] * b["contribs"]
+            ck[np.searchsorted(u, kp["docs"])] = kp["boost"] * kp["contribs"]
+            fl = [{"docs": u, "contribs": np.maximum(cb, ck) + tie * np.minimum(cb, ck),
+                   "boost": 1.0}]
+        out.extend(fl)  # a single disjunct IS the max; tie never applies
+    return out
+
+
+def _collapse_rows(q_lists, values, k: int) -> list[tuple]:
+    """Collapse emitter: the best doc per value of the segment's attribute
+    for the segment's top-k distinct values → [(doc_id, score, value)].
+    Docs without the attribute share one null group (value None)."""
+    if not q_lists:
+        return []
+    uniq, acc = _accumulate(q_lists)
+    group = np.full(len(uniq), -1, dtype=np.int64)
+    for vi, (_v, ids) in enumerate(values):
+        group[np.isin(uniq, ids, assume_unique=True)] = vi
+    rows, seen = [], set()
+    for i in np.lexsort((uniq, -acc)):
+        gcode = int(group[i])
+        if gcode in seen:
+            continue
+        seen.add(gcode)
+        rows.append((int(uniq[i]), float(acc[i]),
+                     values[gcode][0] if gcode >= 0 else None))
+        if len(seen) >= k:
+            break
+    return rows
+
+
+def _explain_rows(q_lists, _values, wanted: np.ndarray) -> list[tuple]:
+    """Explain emitter: one (doc_id, term, field, tf, df, contribution)
+    row per posting of a wanted doc, contribution = boost × contrib."""
+    rows = []
+    for lst in q_lists:
+        m = np.isin(lst["docs"], wanted)
+        rows.extend((int(d), lst["term"], lst["field"], int(tf), lst["df"], float(c))
+                    for d, tf, c in zip(lst["docs"][m], lst["tfs"][m],
+                                        lst["boost"] * lst["contribs"][m]))
+    return rows
+
+
+def _frame(rows: list[tuple], schema: str) -> pd.DataFrame:
+    """Kernel output rows → the typed pandas frame ``schema`` names."""
+    cols = [c.split() for c in schema.split(",")]
+    data = list(zip(*rows)) or [()] * len(cols)
+    return pd.DataFrame({n: np.array(v, dtype=_DTYPES[t])
+                         for (n, t), v in zip(cols, data)})
+
+
 def _make_batch_kernel(qmap, stats, p, k, block_size, scoped: bool,
                        dense_max_width: int = _DENSE_MAX_WIDTH,
                        conjunctive: bool = False,
@@ -534,148 +551,205 @@ def _make_batch_kernel(qmap, stats, p, k, block_size, scoped: bool,
                        use_deletes: bool = False,
                        qweights: dict | None = None,
                        after: dict | None = None,
-                       must_not: dict | None = None):
-    """Per-segment applyInPandas kernel shared by the one-wave and
-    two-wave batch paths.
-
-    scoped=False scores EVERY query of ``qmap`` against the segment;
-    scoped=True reads the segment's surviving query-id list from the
-    joined ``qids`` column (two-wave pruning) and scores only those.
-
-    Adaptive width guard (ADVICE r4): the dense accumulator is only
-    allocated when the segment's doc-id span fits ``_DENSE_MAX_WIDTH`` —
-    repeated compaction multiplies ``segment_docs``, so an old index merged
-    many times can exceed it, in which case each query falls back to the
-    per-query adaptive kernel (``exact_topk_lists`` → BMW on wide spans)
-    instead of growing the per-task buffer unboundedly. Both branches are
-    exact and bit-identical (tests/test_wand_kernel.py).
-    """
+                       must_not: dict | None = None,
+                       build=None, emit=None, schema: str = _PARTIALS):
+    """The per-segment scoring kernel. Decodes the segment once, drops
+    filtered-out and deleted docs, then per query builds its lists — the
+    plain (term, field)-ordered lookup with boost weights, or ``build(qid,
+    terms, by_term)`` (synonym, DisMax) — drops its MUST_NOT docs and turns
+    them into rows: ``emit(q_lists, values)`` (collapse, explain; ``values``
+    decodes the joined ``vals`` column) or the exact top-k dispatch. ``scoped=True`` scores only the joined ``qids``
+    (two-wave). Segments wider than ``dense_max_width`` (compaction
+    multiplies ``segment_docs``) skip the dense buffer and fall back per
+    query. Every branch is exact and bit-identical."""
     qterms = dict(qmap)
+    gated = conjunctive or (min_match is not None and min_match > 1)
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        if scoped:
-            live = [(int(q), qterms[int(q)]) for q in g["qids"].iloc[0]]
-            g = g.drop(columns=["qids"])
-        else:
-            live = qmap
-        allowed = None
-        if filter_attrs:
-            allowed = _allowed_docs(g["flt"].iloc[0], filter_attrs)
-            g = g.drop(columns=["flt"])
-        deleted = None
-        if use_deletes:
-            raw = g["del_ids"].iloc[0]
-            g = g.drop(columns=["del_ids"])
-            if raw is not None and len(raw):
-                deleted = np.asarray(raw, dtype=np.int64)
+        live = [(int(q), qterms[int(q)]) for q in g.pop("qids").iloc[0]] \
+            if scoped else qmap
+        values = _value_docs(g.pop("vals").iloc[0]) if "vals" in g else None
+        allowed = _allowed_docs(g.pop("flt").iloc[0], filter_attrs) \
+            if filter_attrs else None
+        deleted = g.pop("del_ids").iloc[0] if use_deletes else None
         lists = [lst for lst in _decode_group(g, stats, p) if len(lst["docs"])]
         if allowed is not None:
             lists = _apply_doc_filter(lists, allowed, block_size)
-        if deleted is not None:
-            lists = _apply_doc_deletes(lists, deleted, block_size)
-        qids, dids, scores = [], [], []
+        if deleted is not None and len(deleted):
+            lists = _apply_doc_deletes(
+                lists, np.asarray(deleted, dtype=np.int64), block_size)
+        rows = []
         if lists and live:
-            # dense-accumulator setup: segment doc ids live in a bounded
-            # contiguous range, so one reusable width-sized buffer serves
-            # every query (see _taat_topk_dense)
+            # one reusable width-sized buffer serves every query
             base = min(int(lst["docs"][0]) for lst in lists)
             width = max(int(lst["docs"][-1]) for lst in lists) - base + 1
-            gated = conjunctive or (min_match is not None and min_match > 1)
-            dense = width <= dense_max_width and not gated
+            dense = emit is None and not gated and width <= dense_max_width
             by_term: dict[str, list[dict]] = {}
             for lst in sorted(lists, key=lambda d: (d["term"], d["field"])):
-                if dense:
-                    lst["cols"] = (lst["docs"] - base).astype(np.int64)
-                    lst["vals"] = lst["boost"] * lst["contribs"]
                 by_term.setdefault(lst["term"], []).append(lst)
+            if dense:
+                _densify(lists, base)
             acc = np.zeros(width, dtype=np.float64) if dense else None
             for qid, terms in live:
-                if qweights:
-                    q_lists = []
-                    for t in terms:
-                        w = qweights.get((qid, t))
-                        for lst in by_term.get(t, []):
-                            q_lists.append(_weight_list(lst, w) if w else lst)
+                if build is not None:
+                    q_lists = build(qid, terms, by_term)
+                    if dense:
+                        _densify(q_lists, base)
+                elif qweights:
+                    q_lists = [_weight_list(lst, w) if (w := qweights.get((qid, t))) else lst
+                               for t in terms for lst in by_term.get(t, [])]
                 else:
                     q_lists = [lst for t in terms for lst in by_term.get(t, [])]
-                if must_not and qid in must_not:
-                    # Boolean MUST_NOT: drop every posting of a doc that
-                    # contains any excluded term (either field) BEFORE
-                    # scoring — surviving docs keep bit-identical scores.
-                    # The mask copies lists, so the segment's shared
-                    # decoded lists are untouched for other queries; the
-                    # dense fast-path arrays are re-derived from the
-                    # masked copies (the cached ones index the full list).
-                    neg = [lst["docs"] for t in must_not[qid]
-                           for lst in by_term.get(t, [])]
-                    if neg:
-                        excl = np.unique(np.concatenate(neg))
-                        q_lists = _apply_doc_deletes(q_lists, excl,
-                                                     block_size)
-                        if dense:
-                            for lst in q_lists:
-                                lst["cols"] = (lst["docs"] - base).astype(np.int64)
-                                lst["vals"] = lst["boost"] * lst["contribs"]
+                neg = [lst["docs"] for t in must_not.get(qid, ())
+                       for lst in by_term.get(t, [])] if must_not else None
+                if neg:
+                    # MUST_NOT masks copies: the shared lists stay intact
+                    # for other queries; dense arrays re-derive from copies
+                    q_lists = _apply_doc_deletes(
+                        q_lists, np.unique(np.concatenate(neg)), block_size)
+                    if dense:
+                        _densify(q_lists, base)
                 cursor = after.get(qid) if after else None
-                # non-dense fallback: the per-query adaptive kernel, which
-                # may still go dense for a query whose own lists span a
-                # narrow doc range, else BMW — never a segment-width buffer
-                if gated:
-                    # qmap terms are deduped, so len(terms) is the
-                    # distinct-term requirement for AND; min_match clamps
-                    # to it (a 2-term query with min_match=3 needs both)
+                if emit is not None:
+                    out = emit(q_lists, values)
+                elif gated:
+                    # terms are deduped: len(terms) is AND's requirement,
+                    # and min_match clamps to it
                     need = len(terms) if conjunctive \
                         else min(int(min_match), len(terms))
-                    top = _taat_conjunctive(q_lists, need, k, cursor)
+                    out = _taat_conjunctive(q_lists, need, k, cursor)
                 elif dense:
-                    top = _taat_topk_dense(q_lists, acc, base, k, cursor)
-                elif cursor is not None:
-                    # searchAfter needs a post-score gate, which BMW's
-                    # heap can't express — the sparse exact TAAT applies
-                    # the cursor before selection (scores unchanged)
-                    top = _taat_topk(q_lists, k, cursor)
+                    out = _taat_topk_dense(q_lists, acc, base, k, cursor)
+                elif cursor is not None or build is not None:
+                    # BMW's heap can't gate on a cursor, and builder
+                    # lists carry no block metadata
+                    out = _taat_topk(q_lists, k, cursor)
                 else:
-                    top = exact_topk_lists(q_lists, k, block_size,
-                                           dense_max_width)
-                for d, s in top:
-                    qids.append(qid)
-                    dids.append(d)
-                    scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+                    out = exact_topk_lists(q_lists, k, block_size, dense_max_width)
+                rows.extend((qid, *r) for r in out)
+        return _frame(rows, schema)
 
     return kernel
 
 
-def _scoped_partials(hits: DataFrame, pairs: DataFrame, kernel) -> DataFrame:
-    """Run the scoped batch kernel over exactly the (query, segment) pairs
-    given: fold the pair set into a per-segment query-id list (metadata
-    scale — one row per touched segment) and broadcast-join it onto the
-    posting rows, so each posting row still ships/decodes once per segment
-    and the kernel scores only that segment's surviving queries."""
-    seg_queries = pairs.groupBy("segment").agg(
-        F.array_sort(F.collect_list("query_id")).alias("qids"))
-    scoped = hits.join(F.broadcast(seg_queries), "segment")
-    return scoped.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
+def _prep(spark: SparkSession, index_dir: str, queries, postings=None,
+          boosts: bool = True, extra_terms=()):
+    """The driver prep every call shares → (stats, qmap, weights, postings,
+    hits). ``qmap`` is [(query_id, sorted distinct terms)]; ``boosts`` parses
+    ``term^w`` into ``weights``, else the syntax is stripped. ``hits`` is the
+    posting rows of the query terms plus ``extra_terms`` (broadcast hash
+    join), or None when there is no term — the caller then returns empty."""
+    stats = load_stats(index_dir)
+    if boosts:
+        queries, weights = _parse_boosts(queries)
+        qmap = [(int(q), sorted(set(ts))) for q, ts in queries]
+    else:
+        weights = {}
+        qmap = [(int(q), sorted({t.partition("^")[0] for t in ts}))
+                for q, ts in queries]
+    terms = sorted({t for _, ts in qmap for t in ts}.union(extra_terms))
+    if not terms:
+        return stats, qmap, weights, postings, None
+    if postings is None:
+        postings = load_postings(spark, index_dir)
+    t_df = spark.createDataFrame([(t,) for t in terms], "term string")
+    return stats, qmap, weights, postings, postings.join(F.broadcast(t_df), "term")
+
+
+def _empty(spark: SparkSession, schema: str = _TOPK) -> DataFrame:
+    return spark.createDataFrame([], schema)
+
+
+def _score(hits: DataFrame, kernel, pairs: DataFrame | None = None,
+           schema: str = _PARTIALS) -> DataFrame:
+    """Run ``kernel`` once per segment. ``pairs`` (query_id, segment) scopes
+    each segment to its surviving queries via a broadcast per-segment
+    query-id list, so each posting row still decodes once."""
+    if pairs is not None:
+        seg_queries = pairs.groupBy("segment").agg(
+            F.array_sort(F.collect_list("query_id")).alias("qids"))
+        hits = hits.join(F.broadcast(seg_queries), "segment")
+    return hits.groupBy("segment").applyInPandas(kernel, schema)
+
+
+def _by_score(*keys: str):
+    return Window.partitionBy(*keys).orderBy(F.col("score").desc(), F.col("doc_id"))
+
+
+def _rank(partials: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The final rank merge: per query, the top k partial rows by (score
+    desc, doc_id asc); docs are segment-disjoint, so this is the global
+    top-k."""
+    return (partials.withColumn("rank", F.row_number().over(_by_score("query_id")))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "score", *extra))
+
+
+def _require_attrs(stats: dict, index_dir: str, attrs) -> None:
+    built = stats.get("attrs", [])
+    missing = set(attrs) - set(built)
+    if missing:
+        raise ValueError(
+            f"index at {index_dir} has no attribute postings for "
+            f"{sorted(missing)}; built with attrs={built} — rebuild with "
+            "build_index(..., attrs=(...))")
+
+
+def _attr_values(spark: SparkSession, index_dir: str, attr: str) -> DataFrame:
+    """Per-segment (value, docs_vb) lists of one attribute → ``vals``."""
+    return (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
+            .groupBy("segment")
+            .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
+
+
+def _any(conds):
+    return reduce(operator.or_, conds)
+
+
+def _two_wave(spark, postings, hits, qmap, qweights, p, k, wave1_segments, kernel):
+    """The two-wave pruning plan → (ub, w1_pairs, w1, w2_pairs).
+    UB(q, seg) = Σ (max_contrib × field_boost) × qw is an admissible bound
+    from posting METADATA only (the kernels' contribution grouping; a
+    positive weight is monotone). Wave 1 scores each query's
+    ``wave1_segments`` highest-UB segments; θ_q is its kth wave-1 score
+    (fewer than k hits → no θ, no pruning); wave 2 is every other pair with
+    UB ≥ θ_q. Dropped pairs have score ≤ UB < θ_q: they cannot even tie.
+    Pair frames carry ``np`` (Σ n_postings). ``ub``/``w1`` persist through
+    the cache registry (``release_cached()``), so results stay lazy."""
+    qt_df = spark.createDataFrame(
+        [(qid, t, qweights.get((qid, t), 1.0)) for qid, terms in qmap for t in terms],
+        "query_id long, term string, qw double")
+    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
+    ub = persist(
+        postings.select("term", "field", "segment", "max_contrib", "n_postings")
+        .join(F.broadcast(qt_df), "term")
+        .groupBy("query_id", "segment")
+        .agg(F.sum((F.col("max_contrib") * boost) * F.col("qw")).alias("ub"),
+             F.sum("n_postings").alias("np")))
+    uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
+    w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
+                .filter(F.col("rn") <= wave1_segments)
+                .select("query_id", "segment", "np"))
+    w1 = persist(_score(hits, kernel, w1_pairs))
+    theta = (w1.withColumn("rn", F.row_number().over(_by_score("query_id")))
+             .filter(F.col("rn") == k)
+             .select("query_id", F.col("score").alias("theta")))
+    w2_pairs = (ub.join(w1_pairs.select("query_id", "segment").withColumn("w1", F.lit(True)),
+                        ["query_id", "segment"], "left")
+                .filter(F.col("w1").isNull())
+                .join(theta, "query_id", "left")
+                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
+                .select("query_id", "segment", "np"))
+    return ub, w1_pairs, w1, w2_pairs
 
 
 def _expand_range_filters(spark: SparkSession, index_dir: str,
                           ranges: dict) -> dict[str, list[str]]:
-    """Expand {attr: (lo, hi)} range filters into the value-list form the
-    filter path consumes, against the sidecar's DISTINCT (attr, value)
-    domain (a tiny metadata projection — attribute domains are
-    low-cardinality by design; the attr predicate pushes to the scan).
-
-    Numeric bounds compare numerically (values that don't parse are
-    outside any numeric range — Lucene numeric-range semantics); string
-    bounds compare lexicographically. Bounds are inclusive. An attr whose
-    domain has no value in range expands to an empty list, which the
-    filter path resolves to zero matches for that attribute.
-    """
+    """Expand {attr: (lo, hi)} ranges into the filter value lists against
+    the sidecar's DISTINCT (attr, value) domain (tiny; the attr predicate
+    pushes to the scan). Inclusive bounds; numeric bounds compare
+    numerically (unparseable values fall outside), string bounds
+    lexicographically; no value in range → an empty list."""
     dom = (load_attrs(spark, index_dir)
            .filter(F.col("attr").isin(sorted(ranges)))
            .select("attr", "value").distinct().collect())
@@ -698,22 +772,12 @@ def _expand_range_filters(spark: SparkSession, index_dir: str,
     return out
 
 
-def _should_two_wave(n_docs: int, segment_docs: int | None,
-                     cutoff: int) -> bool:
-    """two_wave="auto" dispatch: prune only when the index is segmented
-    finely enough that upper-bound pruning can outrun its own overhead.
-
-    The bench measured the pruning machinery's cost at two extra small
-    jobs (metadata aggregate + threshold join, ~2 s local) while its
-    benefit scales with the number of (query, segment) pairs the bound
-    eliminates — at 98 segments pruning skipped 98.7% of pairs yet still
-    lost wall-clock to the job overhead; at 10^5 segments per term the
-    same ratio is the whole query. The estimated segment count
-    ceil(n_docs / segment_docs) is exact for an uncompacted index and an
-    upper bound after compaction (merge multiplies segment_docs in the
-    rewritten stats), so "auto" errs toward pruning on large indexes —
-    the side where mispredicting costs O(seconds), not O(index scan).
-    """
+def _should_two_wave(n_docs: int, segment_docs: int | None, cutoff: int) -> bool:
+    """two_wave="auto": prune only when the estimated segment count
+    ceil(n_docs / segment_docs) reaches ``cutoff`` — pruning's fixed cost is
+    two small jobs while its gain grows with the pairs it drops. The
+    estimate is exact before compaction and an upper bound after, so "auto"
+    errs toward pruning on large indexes."""
     if not segment_docs:
         return False
     return -(-int(n_docs) // int(segment_docs)) >= cutoff
@@ -737,118 +801,49 @@ def batch_topk(
     must_not: dict[int, list[str]] | None = None,
     range_filters: dict[str, tuple] | None = None,
 ) -> DataFrame:
-    """Batch-throughput top-k: one kernel per *segment*, all queries at once.
+    """Top-k over the compressed index → (query_id, rank, doc_id, score),
+    bit-identical to the oracle. One kernel per *segment* scores all
+    queries: each (term, segment) posting row ships and decodes once.
+    Terms accept Lucene boosts (``"spark^2.5"``, ``_parse_boosts``).
+    Every mask drops postings BEFORE scoring, so surviving docs keep
+    bit-identical scores, and only lowers scores, so two-wave upper
+    bounds stay admissible; all options compose.
 
-    ``range_filters={"attr": (lo, hi), ...}`` adds Lucene/ES range
-    queries over attribute values: inclusive bounds, numeric comparison
-    for numeric bounds (unparseable values fall outside), lexicographic
-    for string bounds. Ranges expand against the sidecar's tiny distinct
-    (attr, value) domain and then ride the ordinary ``filters`` path
-    (IN within an attribute, AND across attributes; naming the same attr
-    in both ``filters`` and ``range_filters`` raises — pass one form per
-    attr). A range matching no domain value matches no documents.
-
-    ``must_not={qid: [terms], ...}`` adds Lucene BooleanQuery MUST_NOT
-    clauses: a doc containing ANY excluded term (either field) can
-    neither rank nor occupy a top-k slot for that query; surviving docs
-    keep bit-identical scores (exclusion masks posting lists before
-    scoring, like deletes, but per query). Excluded terms never score.
-    Composes with conjunctive/min_match/filters/deletes/after; with
-    two-wave pruning the upper bound stays admissible (exclusion only
-    removes candidates, never raises a score).
-
-    ``after={qid: (score, doc_id), ...}`` applies Lucene searchAfter
-    pagination per query: only docs strictly after the cursor in
-    (score desc, doc_id asc) order are eligible, scores unchanged, ranks
-    restart at 1 for the new page — so feeding page N's last (score,
-    doc_id) returns page N+1 without the deep-paging k×page heap.
-    Queries absent from the dict are unpaginated. Composes with two-wave
-    pruning (the wave-1 threshold comes from cursor-filtered scores,
-    which only LOWERS θ — pruning stays admissible) and with
-    conjunctive/min_match/filters/deletes (the cursor gates selection
-    after every other mask).
-
-    ``deletes`` (a DataFrame with a ``doc_id`` column — tombstoned ids,
-    e.g. ``snapshots.read_deletes``) masks deleted docs out of the decoded
-    posting lists before scoring: they can neither rank nor occupy a top-k
-    slot. Scores of surviving docs keep the index's snapshot statistics
-    (stale until compaction purges the tombstones — Lucene delete
-    semantics); compaction with deletes recomputes exact stats.
-
-    ``filters={"lang": ["en", "de"], ...}`` restricts candidates to docs
-    whose attribute values match (IN within an attribute, AND across
-    attributes) — the Lucene filter-field pattern. Requires the index to
-    have been built with ``build_index(..., attrs=(...))``; matching is
-    done against the attribute-postings sidecar inside the segment kernel
-    (posting lists are intersected with the allowed doc set BEFORE
-    scoring), so surviving docs score bit-identically to the unfiltered
-    path and stats stay full-corpus (a filter narrows candidates, it does
-    not re-weight idf/avgdl — same as Lucene). Composes with
-    conjunctive/min_match and with two-wave pruning (filtering only lowers
-    scores, so the metadata upper bounds stay admissible, and θ comes from
-    filtered wave-1 scores).
-
-    ``conjunctive=True`` gives AND semantics: only docs containing every
-    query term are ranked (same BM25 scores); ``min_match=m`` is the
-    Lucene-style generalization (docs matching ≥ m distinct terms,
-    clamped to the query's term count). Correct per segment because
-    doc-range segmentation keeps all of a doc's postings in one segment;
-    composes with two-wave pruning (the UB bounds a doc's disjunctive
-    score, which dominates its gated score, so pruning stays
-    admissible).
-
-    Unlike ``wand_topk`` (which replicates and re-decodes a posting row for
-    every query touching its term), this ships each (term, segment) posting
-    row exactly once, decodes it once, and scores every query against the
-    decoded lists with vectorized TAAT accumulation — the right trade at
-    batch sizes where most lists are shared between queries. Results are
-    bit-identical to wand_topk/oracle. Returns (query_id, rank, doc_id, score).
-
-    two_wave=True enables SEGMENT PRUNING for selective queries — the
-    100×-scale path: at 10^12 docs a query term may appear in 10^5
-    doc-range segments, but a selective query's top-k is decided by the
-    few segments with high-impact postings. Wave 1 scores, per query, the
-    ``wave1_segments`` segments with the largest admissible upper bound
-    UB(q, seg) = Σ_terms max_contrib × field_boost (a JVM-side metadata
-    aggregate over posting-row columns — no blob is decoded) to seed an
-    exact threshold θ_q = the query's wave-1 kth score; wave 2 then scores
-    only the remaining (query, segment) pairs with UB ≥ θ_q. Dropped pairs
-    satisfy score ≤ UB < θ_q strictly, so they cannot even tie the kth
-    result — results are bit-identical to the one-wave path
-    (tests/test_two_wave.py), which stays the default for dense query sets
-    where upper bounds are non-discriminative (the extra metadata
-    aggregation + threshold join cost two small jobs).
-
-    ``postings`` optionally reuses an already-loaded (possibly persisted)
-    posting DataFrame — a long-running query service keeps the index hot
-    instead of re-listing parquet footers per batch.
+    - ``conjunctive=True``: only docs with every query term rank;
+      ``min_match=m``: docs matching ≥ m distinct terms (clamped to the
+      query's term count). Exact per segment: doc-range segmentation
+      keeps all of a doc's postings in one segment.
+    - ``filters={"lang": ["en", "de"]}``: IN within an attribute, AND
+      across attributes, via the attribute sidecar (``build_index(...,
+      attrs=(...))``); stats stay full-corpus, as in Lucene.
+      ``range_filters={"attr": (lo, hi)}`` expand into ``filters``
+      (``_expand_range_filters``; one form per attr).
+    - ``deletes``: tombstoned ``doc_id``s; survivors keep the snapshot's
+      stats until compaction purges them (Lucene delete semantics).
+    - ``must_not={qid: [terms]}``: Lucene MUST_NOT — a doc containing an
+      excluded term (either field) cannot rank; excluded terms never score.
+    - ``after={qid: (score, doc_id)}``: searchAfter pagination — only docs
+      strictly after the cursor in (score desc, doc_id asc) order, scores
+      unchanged, ranks restart at 1; the cursor gates selection last.
+    - ``two_wave=True``: segment pruning for selective queries
+      (``_two_wave``), bit-identical to the one-wave default; ``"auto"``
+      decides by ``_should_two_wave``.
+    - ``postings``: reuse a loaded posting DataFrame (keeps a service hot).
     """
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    block_size_meta = stats_all.get("block_size", 64)
-    if two_wave == "auto":
-        two_wave = _should_two_wave(stats_all["n_docs"],
-                                    stats_all.get("segment_docs"),
-                                    auto_cutoff)
-    queries, qweights = _parse_boosts(queries)
-    qmap = [(qid, sorted(set(terms))) for qid, terms in queries]
     must_not = {int(q): sorted(set(ts)) for q, ts in must_not.items() if ts} \
         if must_not else None
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    if must_not:
-        # excluded terms join the posting scan (their doc lists feed the
-        # per-query exclusion sets) but are never added to scoring terms
-        all_terms = sorted(set(all_terms)
-                           | {t for ts in must_not.values() for t in ts})
-    if not all_terms:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.join(F.broadcast(t_df), "term")
+    # excluded terms join the scan (their docs feed the exclusion
+    # sets) but never score
+    stats, qmap, qweights, postings, hits = _prep(
+        spark, index_dir, queries, postings,
+        extra_terms=[t for ts in (must_not or {}).values() for t in ts])
+    if hits is None:
+        return _empty(spark)
+    if two_wave == "auto":
+        two_wave = _should_two_wave(stats["n_docs"], stats.get("segment_docs"),
+                                    auto_cutoff)
 
     if range_filters:
         overlap = set(range_filters) & set(filters or {})
@@ -856,122 +851,63 @@ def batch_topk(
             raise ValueError(
                 f"attrs {sorted(overlap)} appear in both filters and "
                 "range_filters — pass one form per attribute")
-        missing_attrs = set(range_filters) - set(stats_all.get("attrs", []))
-        if missing_attrs:
-            raise ValueError(
-                f"index at {index_dir} has no attribute postings for "
-                f"{sorted(missing_attrs)}; built with "
-                f"attrs={stats_all.get('attrs', [])}")
+        _require_attrs(stats, index_dir, range_filters)
         expanded = _expand_range_filters(spark, index_dir, range_filters)
         if any(not v for v in expanded.values()):
-            # some range matches no attribute value at all → no document
-            # can satisfy the conjunction; skip the scan entirely
-            return spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double")
+            # a range matching no value → no doc matches; skip the scan
+            return _empty(spark)
         filters = {**(filters or {}), **expanded}
 
     filter_attrs = sorted(filters) if filters else None
     if filters:
-        built_with = set(stats_all.get("attrs", []))
-        missing = set(filter_attrs) - built_with
-        if missing:
-            raise ValueError(
-                f"index at {index_dir} has no attribute postings for "
-                f"{sorted(missing)}; built with attrs={sorted(built_with)} — "
-                f"rebuild with build_index(..., attrs=(...))")
-        cond = None
-        for a, vals in filters.items():
-            c = (F.col("attr") == a) & F.col("value").isin([str(v) for v in vals])
-            cond = c if cond is None else (cond | c)
-        # (attr, value) predicate pushes to the sidecar's parquet scan;
-        # one tiny row per (attr, segment) joins the posting groups, so a
-        # segment with NO allowed docs drops before its kernel ever runs
+        _require_attrs(stats, index_dir, filter_attrs)
+        cond = _any([(F.col("attr") == a) & F.col("value").isin([str(v) for v in vals])
+                     for a, vals in filters.items()])
+        # the predicate pushes to the sidecar scan; a segment with no
+        # allowed docs drops at the join, before its kernel runs
         flt = (load_attrs(spark, index_dir).filter(cond)
                .groupBy("segment")
                .agg(F.collect_list(F.struct("attr", "docs_vb")).alias("flt")))
         hits = hits.join(flt, "segment")
 
-    use_deletes = deletes is not None
-    if use_deletes:
-        seg_docs = int(stats_all.get("segment_docs") or 0)
+    if deletes is not None:
+        seg_docs = int(stats.get("segment_docs") or 0)
         if not seg_docs:
             raise ValueError(f"{index_dir}: stats.json has no segment_docs — "
                              "cannot map tombstones to segments")
-        # per-segment sorted tombstone lists (bounded by segment_docs per
-        # row); LEFT join — segments without deletes keep every posting
+        # per-segment sorted tombstones; LEFT join keeps clean segments
         seg_del = (deletes.select("doc_id").distinct()
                    .groupBy((F.col("doc_id") / F.lit(seg_docs))
                             .cast("long").alias("segment"))
                    .agg(F.sort_array(F.collect_list("doc_id")).alias("del_ids")))
         hits = hits.join(seg_del, "segment", "left")
 
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
     after = {int(q): (float(s), int(d)) for q, (s, d) in after.items()} \
         if after else None
-    if not two_wave:
-        kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=False,
-                                    conjunctive=conjunctive, min_match=min_match,
-                                    filter_attrs=filter_attrs,
-                                    use_deletes=use_deletes, qweights=qweights,
-                                    after=after, must_not=must_not)
-        partials = hits.groupBy("segment").applyInPandas(
-            kernel, "query_id long, doc_id long, score double")
-        return (partials.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
-
-    kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=True,
-                                conjunctive=conjunctive, min_match=min_match,
-                                filter_attrs=filter_attrs,
-                                use_deletes=use_deletes, qweights=qweights,
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=bool(two_wave), conjunctive=conjunctive,
+                                min_match=min_match, filter_attrs=filter_attrs,
+                                use_deletes=deletes is not None, qweights=qweights,
                                 after=after, must_not=must_not)
-    # per-(query, segment) admissible upper bound from posting METADATA
-    # columns only (max_contrib is written at encode time) — this scan
-    # reads no posting blobs (parquet column pruning) and aggregates to
-    # one row per (query, touched segment)
-    pair_rows = [(qid, t, qweights.get((qid, t), 1.0))
-                 for qid, terms in qmap for t in terms]
-    qt_df = spark.createDataFrame(pair_rows,
-                                  "query_id long, term string, qw double")
-    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
-    # (max_contrib × boost) × qw — same grouping as the kernels' weighted
-    # contribution, and float multiply by a positive weight is monotone,
-    # so the bound stays admissible under query boosts
-    # registry persists (r6): the former local persist + try/finally
-    # unpersist forced an EAGER localCheckpoint of the final frame (a full
-    # extra materialization pass) just so the intermediates could be
-    # released before returning. Routing them through the session cache
-    # registry keeps the result lazy — callers/benches release storage via
-    # release_cached() / catalog.clearCache() as with every other
-    # operator-internal persist.
-    from dlkp_spark.cache import persist as _registry_persist
+    if not two_wave:
+        return _rank(_score(hits, kernel), k)
+    _, _, w1, w2_pairs = _two_wave(spark, postings, hits, qmap, qweights, p, k,
+                                   wave1_segments, kernel)
+    return _rank(w1.unionByName(_score(hits, kernel, w2_pairs)), k)
 
-    ub = _registry_persist(
-        postings.select("term", "field", "segment", "max_contrib")
-        .join(F.broadcast(qt_df), "term")
-        .groupBy("query_id", "segment")
-        .agg(F.sum((F.col("max_contrib") * boost) * F.col("qw")).alias("ub")))
-    uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
-    w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
-                .filter(F.col("rn") <= wave1_segments)
-                .select("query_id", "segment"))
-    w1 = _registry_persist(_scoped_partials(hits, w1_pairs, kernel))
-    # exact per-query threshold: the kth wave-1 score (queries with
-    # fewer than k wave-1 hits have no row → no pruning for them)
-    theta = (w1.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") == k)
-             .select("query_id", F.col("score").alias("theta")))
-    w2_pairs = (ub.join(w1_pairs.withColumn("w1", F.lit(True)),
-                        ["query_id", "segment"], "left")
-                .filter(F.col("w1").isNull())
-                .join(theta, "query_id", "left")
-                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-                .select("query_id", "segment"))
-    w2 = _scoped_partials(hits, w2_pairs, kernel)
-    partials = w1.unionByName(w2)
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+
+# the latency entry point runs on the batch kernel; the name stays for
+# callers and the bm25_wand_topk contract entry
+wand_topk = batch_topk
+
+
+def _check_expansion(expanded: dict, max_expansion: int, label, hint: str) -> None:
+    """Lucene maxClauseCount guard: too long an expansion raises."""
+    for src, terms in expanded.items():
+        if len(terms) > max_expansion:
+            raise ValueError(
+                f"{label(src)} expands to {len(terms)} terms "
+                f"(> max_expansion={max_expansion}) — {hint}")
 
 
 def prefix_topk(
@@ -984,63 +920,32 @@ def prefix_topk(
     postings: DataFrame | None = None,
     **topk_kw,
 ) -> DataFrame:
-    """Prefix (wildcard ``pre*``) top-k: expand each prefix to its matching
-    index terms, then score as a multi-term OR query through the regular
-    batch kernel — each matched term keeps its own idf, identical to
-    running the expanded term list by hand. Extra kwargs
-    (filters/deletes/...) pass through to ``batch_topk``.
-
-    Expansion happens against the INDEX's term dictionary (one distinct
-    projection over posting-row metadata — no blob decodes; the
-    StartsWith predicate reaches the parquet scan). ``max_expansion``
-    guards runaway prefixes the way Lucene's maxClauseCount does: a
-    prefix matching more terms raises instead of shipping an unbounded
-    term list to every kernel.
-    """
-    p = p or BM25Params()
-    k = k or p.k
+    """Prefix (``pre*``) top-k: each prefix expands against the index's
+    term dictionary (a distinct projection over posting metadata; the
+    StartsWith predicate reaches the scan) and scores as a multi-term OR
+    through ``batch_topk`` — per-term idf, as if expanded by hand. Extra
+    kwargs pass to ``batch_topk``."""
     qmap = [(int(qid), str(pre)) for qid, pre in queries]
+    if not qmap:
+        return _empty(spark)
     if postings is None:
         postings = load_postings(spark, index_dir)
     prefixes = sorted({pre for _, pre in qmap})
-    if not prefixes:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    cond = None
-    for pre in prefixes:
-        c = F.col("term").startswith(pre)
-        cond = c if cond is None else (cond | c)
-    vocab = [r["term"] for r in
-             postings.filter(cond).select("term").distinct().collect()]
-    expanded: dict[str, list[str]] = {
-        pre: sorted(t for t in vocab if t.startswith(pre)) for pre in prefixes}
-    for pre, terms in expanded.items():
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"prefix '{pre}*' expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — narrow the prefix "
-                "or raise the cap")
-    term_queries = [(qid, expanded[pre]) for qid, pre in qmap]
-    return batch_topk(spark, index_dir, term_queries, p, k=k,
-                      postings=postings, **topk_kw)
+    vocab = [r["term"] for r in postings.filter(
+        _any([F.col("term").startswith(pre) for pre in prefixes]))
+        .select("term").distinct().collect()]
+    expanded = {pre: sorted(t for t in vocab if t.startswith(pre)) for pre in prefixes}
+    _check_expansion(expanded, max_expansion, lambda pre: f"prefix '{pre}*'",
+                     "narrow the prefix or raise the cap")
+    return batch_topk(spark, index_dir, [(qid, expanded[pre]) for qid, pre in qmap],
+                      p, k=k, postings=postings, **topk_kw)
 
 
 def _wildcard_regex(pattern: str) -> str:
-    """Translate a Lucene wildcard pattern (``*`` = any run, ``?`` = one
-    char) to an anchored regex understood identically by Spark's rlike
-    and DuckDB's regexp_full_match — all other chars are escaped
-    literally."""
-    import re as _re
-
-    out = []
-    for ch in pattern:
-        if ch == "*":
-            out.append(".*")
-        elif ch == "?":
-            out.append(".")
-        else:
-            out.append(_re.escape(ch))
-    return "".join(out)
+    """Lucene wildcard → anchored regex body, read identically by Spark's
+    rlike and DuckDB's regexp_full_match; other chars match literally."""
+    return "".join(".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
+                   for ch in pattern)
 
 
 def wildcard_topk(
@@ -1053,59 +958,29 @@ def wildcard_topk(
     postings: DataFrame | None = None,
     **topk_kw,
 ) -> DataFrame:
-    """Wildcard (Lucene WildcardQuery) top-k: each pattern (``*`` = any
-    run, ``?`` = exactly one char) expands against the index's term
-    dictionary and scores as a multi-term OR through the batch kernel —
-    the same rewrite contract as ``prefix_topk`` (per-expanded-term idf).
-
-    Expansion is one distinct projection over posting metadata filtered
-    with an anchored ``rlike`` (JVM regex; a leading literal prefix still
-    lets the scan skip non-matching row groups via the OR of StartsWith
-    prefixes below). ``max_expansion`` guards runaway patterns like
-    Lucene's maxClauseCount. Leading-wildcard patterns are allowed but,
-    as in Lucene, scan the whole dictionary — prefer an anchored prefix.
-    """
-    p = p or BM25Params()
-    k = k or p.k
+    """Wildcard (Lucene WildcardQuery: ``*`` any run, ``?`` one char) top-k
+    with ``prefix_topk``'s rewrite contract. Matching is an anchored JVM
+    ``rlike``; each pattern's literal prefix still prunes the scan (a leading
+    wildcard scans the whole dictionary, as in Lucene)."""
     qmap = [(int(qid), str(pat)) for qid, pat in queries]
     pats = sorted({pat for _, pat in qmap})
     if not pats:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return _empty(spark)
     if postings is None:
         postings = load_postings(spark, index_dir)
-    vocab = postings.select("term").distinct()
     # literal prefix (chars before the first wildcard) prunes the scan
-    pre_cond = None
-    for pat in pats:
-        cut = min([i for i, c in enumerate(pat) if c in "*?"] + [len(pat)])
-        c = F.col("term").startswith(pat[:cut]) if cut else F.lit(True)
-        pre_cond = c if pre_cond is None else (pre_cond | c)
-    rx_cond = None
-    for pat in pats:
-        c = F.col("term").rlike(f"^{_wildcard_regex(pat)}$")
-        rx_cond = c if rx_cond is None else (rx_cond | c)
+    cuts = [min([i for i, c in enumerate(pat) if c in "*?"] + [len(pat)]) for pat in pats]
+    pre_cond = _any([F.col("term").startswith(pat[:cut]) if cut else F.lit(True)
+                     for pat, cut in zip(pats, cuts)])
+    rx_cond = _any([F.col("term").rlike(f"^{_wildcard_regex(pat)}$") for pat in pats])
     matched = [r["term"] for r in
-               vocab.filter(pre_cond & rx_cond).collect()]
-    import re as _re
-
-    expanded: dict[str, list[str]] = {}
-    for pat in pats:
-        rx = _re.compile(f"^{_wildcard_regex(pat)}$")
-        terms = sorted(t for t in matched if rx.match(t))
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"wildcard '{pat}' expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — narrow the pattern "
-                "or raise the cap")
-        expanded[pat] = terms
-    term_queries = [(qid, expanded[pat]) for qid, pat in qmap
-                    if expanded[pat]]
-    if not term_queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    return batch_topk(spark, index_dir, term_queries, p, k=k,
-                      postings=postings, **topk_kw)
+               postings.select("term").distinct().filter(pre_cond & rx_cond).collect()]
+    expanded = {pat: sorted(filter(re.compile(f"^{_wildcard_regex(pat)}$").match, matched))
+                for pat in pats}
+    _check_expansion(expanded, max_expansion, lambda pat: f"wildcard '{pat}'",
+                     "narrow the pattern or raise the cap")
+    return batch_topk(spark, index_dir, [(qid, expanded[pat]) for qid, pat in qmap],
+                      p, k=k, postings=postings, **topk_kw)
 
 
 def synonym_topk(
@@ -1116,118 +991,34 @@ def synonym_topk(
     k: int | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Synonym-aware top-k with Lucene SynonymQuery blending: each query
-    is a list of CLAUSES, a clause being a plain term or a list of
-    synonyms. A synonym group scores as ONE pseudo-term per field —
-    tf = Σ member tfs in the doc, idf from df = max member df (Lucene's
-    SynonymQuery docFreq rule: overlap between members is unknowable
-    from per-term stats, and max under-counts rather than over-counts) —
-    so a doc matching any member matches the clause, and matching several
-    members raises tf, not the number of matched clauses. A singleton
-    clause reduces exactly to the plain term query.
-
-    Per-clause df_max is resolved GLOBALLY from posting metadata before
-    the kernel (a member term may be absent from a given segment but
-    still carry the group's max df — per-segment resolution would score
-    the same doc differently depending on which segment it lives in).
-    The segment kernel merges member doc lists with one unique+scatter
-    pass per (clause, field) and accumulates clause contributions in
-    (clause index, field) order; docs are segment-disjoint so the global
-    top-k is the usual window merge. → (query_id, rank, doc_id, score).
-    """
-    from dlkp_spark.config import FIELD_BODY
-
+    """Lucene SynonymQuery top-k. A query is a list of CLAUSES — a term or
+    a list of synonyms scored as ONE pseudo-term per field (tf = Σ member
+    tfs, df = max member df): matching more members raises tf, and a
+    singleton clause is exactly the plain term. Clause df is resolved
+    GLOBALLY from posting metadata, so a doc's score doesn't depend on its
+    segment; the ``_synonym_lists`` builder accumulates in (clause, field)
+    order."""
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap: list[tuple[int, list[tuple[str, ...]]]] = []
-    for qid, clauses in queries:
-        norm = []
-        for cl in clauses:
-            members = (cl,) if isinstance(cl, str) else tuple(sorted(set(cl)))
-            norm.append(members)
-        qmap.append((int(qid), norm))
-    all_terms = sorted({t for _, cls in qmap for cl in cls for t in cl})
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
+    qmap = [(int(qid), [(cl,) if isinstance(cl, str) else tuple(sorted(set(cl)))
+                        for cl in clauses]) for qid, clauses in queries]
+    stats, _, _, _, hits = _prep(
+        spark, index_dir, [], postings,
+        extra_terms={t for _, cls in qmap for cl in cls for t in cl})
+    if hits is None:
+        return _empty(spark)
     # global per-(term, field) df from metadata — tiny (|terms| × 2 rows)
-    df_rows = (postings.select("term", "field", "df")
-               .join(F.broadcast(t_df), "term").distinct().collect())
-    term_df = {(r["term"], int(r["field"])): int(r["df"]) for r in df_rows}
-    fields = sorted({int(r["field"]) for r in df_rows}) or [FIELD_BODY]
+    term_df = {(r["term"], int(r["field"])): int(r["df"])
+               for r in hits.select("term", "field", "df").distinct().collect()}
+    fields = sorted({f for _, f in term_df}) or [FIELD_BODY]
     # df_max per (clause, field), resolved once for the whole index
-    clause_df: dict[tuple[tuple[str, ...], int], int] = {}
-    for _, cls in qmap:
-        for cl in cls:
-            for f in fields:
-                dfs = [term_df[(t, f)] for t in cl if (t, f) in term_df]
-                if dfs:
-                    clause_df[(cl, f)] = max(dfs)
-
-    hits = postings.join(F.broadcast(t_df), "term")
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        docs_f, tfs_f, dls_f, counts = decode_postings_batch(
-            g["docs_vb"].tolist(), g["tfs_vb"].tolist(), g["dls_vb"].tolist())
-        offsets = np.concatenate(([0], np.cumsum(counts)))
-        entries: dict[tuple[str, int], tuple] = {}
-        for i in range(len(g)):
-            s, e = offsets[i], offsets[i + 1]
-            entries[(g["term"].iloc[i], int(g["field"].iloc[i]))] = (
-                docs_f[s:e], tfs_f[s:e], dls_f[s:e])
-        qids, dids, scores = [], [], []
-        for qid, cls in qmap:
-            q_lists = []
-            for cl in cls:  # clause order = query order (deterministic)
-                for f in fields:
-                    parts = [entries[(t, f)] for t in cl if (t, f) in entries]
-                    if not parts:
-                        continue
-                    if len(parts) == 1:
-                        u, tf_sum, dl_u = parts[0]
-                    else:
-                        docs = np.concatenate([pt[0] for pt in parts])
-                        tfs = np.concatenate([pt[1] for pt in parts])
-                        dls = np.concatenate([pt[2] for pt in parts])
-                        u, inv = np.unique(docs, return_inverse=True)
-                        tf_sum = np.zeros(len(u), dtype=np.int64)
-                        np.add.at(tf_sum, inv, tfs)
-                        # dl is a (doc, field) property — every member
-                        # carries the same value, any write wins
-                        dl_u = np.zeros(len(u), dtype=np.int64)
-                        dl_u[inv] = dls
-                    idf = idf_fn(stats["n_docs"], clause_df[(cl, f)])
-                    tff = tf_sum.astype(np.float64)
-                    dlf = dl_u.astype(np.float64)
-                    avgdl = stats["avgdl"][f]
-                    tfn = (tff * (p.k1 + 1.0)) / (
-                        tff + p.k1 * (1.0 - p.b + p.b * dlf / avgdl))
-                    q_lists.append({
-                        "docs": u, "contribs": idf * tfn,
-                        "boost": p.kp_boost if f == FIELD_KP else 1.0,
-                    })
-            for d, s in _taat_topk_lists_presorted(q_lists, k):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
-
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    clause_df = {(cl, f): max(dfs) for _, cls in qmap for cl in cls for f in fields
+                 if (dfs := [term_df[(t, f)] for t in cl if (t, f) in term_df])}
+    build = partial(_synonym_lists, fields=fields, clause_df=clause_df,
+                    stats=stats, p=p)
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=False, build=build)
+    return _rank(_score(hits, kernel), k)
 
 
 def collapse_topk(
@@ -1239,112 +1030,30 @@ def collapse_topk(
     k: int | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Field collapsing (Lucene grouping / Elasticsearch ``collapse``):
-    per query, the top-k docs with AT MOST ONE doc — the best-scoring —
-    per value of ``attr``. The web-search "one result per site" shape.
-    Docs missing the attribute collapse into one shared null group (ES
-    null-bucket semantics). → (query_id, rank, doc_id, score, value).
-
-    Scale shape: the kernel scores a segment once for all queries (the
-    usual decode-once TAAT pass), maps scored docs to values via the
-    attribute-postings sidecar (already segment-local), and emits only
-    the per-value best for the segment's TOP-K DISTINCT VALUES — enough
-    for exactness: if a value's best doc is outranked by k other values'
-    bests within its own segment, those same k values outrank it
-    globally, so it can never reach the global top-k. The global merge
-    is a two-window pass over ≤ k rows per (query, segment): best per
-    (query, value), then rank. Requires ``build_index(..., attrs=(...,
-    attr, ...))``.
-    """
+    """Field collapsing (Lucene grouping / ES ``collapse``): per query, the
+    top-k docs with at most one — the best — per value of ``attr``; docs
+    without it share one null group. Boosts are stripped. → (query_id, rank,
+    doc_id, score, value). The ``_collapse_rows`` emitter keeps each
+    segment's top-k distinct values (exact: a value outranked by k others in
+    its segment is outranked globally); then best per value, then rank."""
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    if attr not in stats_all.get("attrs", []):
-        raise ValueError(
-            f"index at {index_dir} has no attribute postings for '{attr}'; "
-            f"built with attrs={stats_all.get('attrs', [])}")
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    schema = "query_id long, doc_id long, score double, value string"
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double, value string")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    vals = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
-            .groupBy("segment")
-            .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
-    # LEFT join (r6 fix, ADVICE): an inner join dropped every posting of a
-    # segment with zero docs carrying the attribute, so that segment's
-    # docs could never rank — ES null-bucket semantics say they compete in
-    # the shared null group, exactly like per-doc missing values
-    hits = postings.join(F.broadcast(t_df), "term").join(vals, "segment", "left")
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        vrow = g["vals"].iloc[0]
-        value_docs = [(r["value"],
-                       delta_decode(varbyte_decode(r["docs_vb"])
-                                    .astype(np.int64)))
-                      for r in (vrow if vrow is not None else [])]
-        g = g.drop(columns=["vals"])
-        lists = [lst for lst in _decode_group(g, stats, p)
-                 if len(lst["docs"])]
-        by_term: dict[str, list[dict]] = {}
-        for lst in sorted(lists, key=lambda d: (d["term"], d["field"])):
-            by_term.setdefault(lst["term"], []).append(lst)
-        qids, dids, scores, values = [], [], [], []
-        for qid, terms in qmap:
-            q_lists = [lst for t in terms for lst in by_term.get(t, [])]
-            if not q_lists:
-                continue
-            docs = np.concatenate([lst["docs"] for lst in q_lists])
-            contribs = np.concatenate(
-                [lst["boost"] * lst["contribs"] for lst in q_lists])
-            uniq, inv = np.unique(docs, return_inverse=True)
-            acc = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(acc, inv, contribs)
-            # doc → value-code; unmatched docs share the null group (-1)
-            group = np.full(len(uniq), -1, dtype=np.int64)
-            for vi, (_v, ids) in enumerate(value_docs):
-                pos = np.searchsorted(ids, uniq)
-                hit = (pos < len(ids)) & \
-                    (ids[np.minimum(pos, len(ids) - 1)] == uniq)
-                group[hit] = vi
-            order = np.lexsort((uniq, -acc))
-            seen: set[int] = set()
-            for i in order:
-                gcode = int(group[i])
-                if gcode in seen:
-                    continue
-                seen.add(gcode)
-                qids.append(qid)
-                dids.append(int(uniq[i]))
-                scores.append(float(acc[i]))
-                values.append(value_docs[gcode][0] if gcode >= 0 else None)
-                if len(seen) >= k:
-                    break
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-            "value": pd.Series(values, dtype="object"),
-        })
-
-    partials = hits.groupBy("segment").applyInPandas(kernel, schema)
-    # best per (query, value) across segments — NULL values form one
-    # partition (the shared null group) in both Spark and the SQL oracle
-    wv = Window.partitionBy("query_id", "value").orderBy(
-        F.col("score").desc(), F.col("doc_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id"))
-    return (partials.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1).drop("rn")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score", "value"))
+    stats, qmap, _, _, hits = _prep(spark, index_dir, queries, postings, boosts=False)
+    _require_attrs(stats, index_dir, [attr])
+    schema = _PARTIALS + ", value string"
+    if hits is None:
+        return _empty(spark, _TOPK + ", value string")
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=False, emit=partial(_collapse_rows, k=k),
+                                schema=schema)
+    # LEFT join: a segment with zero docs carrying the attribute still
+    # ranks — its docs compete in the shared null group
+    partials = _score(hits.join(_attr_values(spark, index_dir, attr), "segment", "left"),
+                      kernel, schema=schema)
+    # best per (query, value); NULL values form one partition, as in SQL
+    best = (partials.withColumn("rn", F.row_number().over(_by_score("query_id", "value")))
+            .filter(F.col("rn") == 1).drop("rn"))
+    return _rank(best, k, "value")
 
 
 def dismax_topk(
@@ -1356,112 +1065,30 @@ def dismax_topk(
     tie: float = 0.1,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """DisMax (Lucene DisjunctionMaxQuery) field combination: per query
-    term and doc, the body and keyphrase-field contributions combine as
-    ``max + tie × min`` instead of the default sum — the "best field
-    wins, others tie-break" semantics that stops a term matching weakly
-    in both fields from outranking a strong single-field match. Each
-    field keeps its own idf/avgdl and the kp field keeps its boost
-    (Lucene applies field boosts inside the disjuncts); tie=1.0 recovers
-    the default sum combiner exactly and tie=0.0 is pure max. Per-term
-    disjunct scores then sum across query terms (term-asc float order).
-    → (query_id, rank, doc_id, score).
-
-    Scale shape is identical to ``batch_topk``'s one-wave path: each
-    matched posting row ships and decodes once per segment, the combiner
-    is one union+scatter pass per (term, doc-overlap), and only k rows
-    per (query, segment) leave the kernel.
-    """
-    from dlkp_spark.config import FIELD_BODY
-
+    """DisMax (Lucene DisjunctionMaxQuery): per term and doc the body and kp
+    contributions combine as ``max + tie × min`` (each field keeps its idf,
+    avgdl and boost; tie=1.0 is the default sum, 0.0 pure max), then sum
+    over terms in term order (the ``_dismax_lists`` builder). Boosts are
+    stripped. → (query_id, rank, doc_id, score)."""
     p = p or BM25Params()
     k = k or p.k
     if not 0.0 <= tie <= 1.0:
         raise ValueError(f"tie must be in [0, 1], got {tie}")
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.join(F.broadcast(t_df), "term")
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        lists = _decode_group(g, stats, p)
-        by_tf: dict[tuple[str, int], dict] = {
-            (lst["term"], lst["field"]): lst for lst in lists
-            if len(lst["docs"])}
-        qids, dids, scores = [], [], []
-        for qid, terms in qmap:
-            q_lists = []
-            for t in terms:
-                fl = [by_tf[(t, f)] for f in (FIELD_BODY, FIELD_KP)
-                      if (t, f) in by_tf]
-                if not fl:
-                    continue
-                if len(fl) == 1:
-                    lst = fl[0]
-                    # a single disjunct IS the max; tie never applies
-                    q_lists.append({"docs": lst["docs"],
-                                    "contribs": lst["contribs"],
-                                    "boost": lst["boost"]})
-                    continue
-                b, kp = fl
-                u = np.union1d(b["docs"], kp["docs"])
-                cb = np.zeros(len(u), dtype=np.float64)
-                ck = np.zeros(len(u), dtype=np.float64)
-                cb[np.searchsorted(u, b["docs"])] = b["boost"] * b["contribs"]
-                ck[np.searchsorted(u, kp["docs"])] = kp["boost"] * kp["contribs"]
-                comb = np.maximum(cb, ck) + tie * np.minimum(cb, ck)
-                q_lists.append({"docs": u, "contribs": comb, "boost": 1.0})
-            for d, s in _taat_topk_lists_presorted(q_lists, k):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
-
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
-
-
-def _taat_topk_lists_presorted(q_lists: list[dict], k: int) -> list[tuple[int, float]]:
-    """`_taat_topk` accumulation over lists whose order the CALLER fixed
-    (clause order, not (term, field)) — synonym clauses have no term key."""
-    q_lists = [lst for lst in q_lists if len(lst["docs"])]
-    if not q_lists:
-        return []
-    docs = np.concatenate([lst["docs"] for lst in q_lists])
-    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in q_lists])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, contribs)
-    order = np.lexsort((uniq, -acc))[:k]
-    return [(int(uniq[i]), float(acc[i])) for i in order]
+    stats, qmap, _, _, hits = _prep(spark, index_dir, queries, postings, boosts=False)
+    if hits is None:
+        return _empty(spark)
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=False, build=partial(_dismax_lists, tie=tie))
+    return _rank(_score(hits, kernel), k)
 
 
 def _fuzzy_expand(spark: SparkSession, postings: DataFrame,
                   srcs: list[str], max_edits: int,
                   prefix_len: int) -> DataFrame:
-    """The fuzzy expansion frame: (src, term) pairs from the index term
-    dictionary within ``max_edits`` of a source, sharing its first
-    ``prefix_len`` chars. The StartsWith prefix gate reaches the posting
-    metadata scan (plan-pinned) and the tiny source list broadcasts, so
-    the JVM-side levenshtein runs only over the prefix-pruned dictionary
-    slice."""
+    """(src, term) pairs from the term dictionary within ``max_edits`` of a
+    source and sharing its first ``prefix_len`` chars. The StartsWith gate
+    reaches the scan and the sources broadcast, so the JVM levenshtein runs
+    only over the prefix-pruned dictionary slice."""
     src_df = spark.createDataFrame([(s,) for s in srcs], "src string")
     vocab = postings.select("term").distinct()
     if prefix_len > 0:
@@ -1477,6 +1104,7 @@ def _fuzzy_expand(spark: SparkSession, postings: DataFrame,
     return vocab.join(F.broadcast(src_df), join_cond).select("src", "term")
 
 
+
 def fuzzy_topk(
     spark: SparkSession,
     index_dir: str,
@@ -1489,57 +1117,75 @@ def fuzzy_topk(
     postings: DataFrame | None = None,
     **topk_kw,
 ) -> DataFrame:
-    """Fuzzy (Lucene FuzzyQuery) top-k: each query term expands to every
-    index term within Levenshtein distance ``max_edits`` that shares its
-    first ``prefix_len`` characters, then scores as a multi-term OR
-    through the regular batch kernel — each matched term keeps its own
-    idf, identical to running the expanded term list by hand (the same
-    rewrite contract as ``prefix_topk``; Lucene's blended-frequency
-    rewrite is a scoring variation we deliberately skip so the expansion
-    stays bit-replayable by the SQL oracle).
-
-    Expansion runs against the INDEX's term dictionary entirely JVM-side:
-    one distinct projection over posting metadata (no blob decodes), a
-    StartsWith prefix gate that reaches the parquet scan (Lucene requires
-    the same non-zero prefix for exactly this reason — at web scale the
-    dictionary is huge and an unanchored edit-distance sweep reads all of
-    it), and Spark's built-in ``levenshtein(term, src, threshold)`` with
-    the early-exit threshold. ``max_expansion`` guards runaway expansions
-    the way Lucene's maxClauseCount does. A query term always matches
-    itself (distance 0) when indexed.
-    """
-    p = p or BM25Params()
-    k = k or p.k
+    """Fuzzy (Lucene FuzzyQuery) top-k: each term expands to every indexed
+    term within Levenshtein ``max_edits`` sharing its first ``prefix_len``
+    chars, then scores as a multi-term OR with per-term idf (Lucene's
+    blended-frequency rewrite is skipped so the SQL oracle can replay it).
+    Expansion runs JVM-side: a prefix gate at the scan (the reason Lucene
+    requires a prefix) and ``levenshtein(term, src, threshold)``."""
     if max_edits < 0 or prefix_len < 0:
         raise ValueError("max_edits and prefix_len must be >= 0")
-    qmap = [(int(qid), sorted({str(t) for t in terms}))
-            for qid, terms in queries]
+    qmap = [(int(qid), sorted({str(t) for t in terms})) for qid, terms in queries]
     srcs = sorted({t for _, terms in qmap for t in terms})
     if not srcs:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return _empty(spark)
     if postings is None:
         postings = load_postings(spark, index_dir)
-    matched = _fuzzy_expand(spark, postings, srcs, max_edits,
-                            prefix_len).collect()
     expanded: dict[str, list[str]] = {s: [] for s in srcs}
-    for r in matched:
+    for r in _fuzzy_expand(spark, postings, srcs, max_edits, prefix_len).collect():
         expanded[r["src"]].append(r["term"])
-    for s, terms in expanded.items():
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"fuzzy '{s}'~{max_edits} expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — raise prefix_len, "
-                "lower max_edits, or raise the cap")
-    term_queries = [
-        (qid, sorted({t for s in terms for t in expanded[s]}))
-        for qid, terms in qmap]
-    term_queries = [(qid, ts) for qid, ts in term_queries if ts]
-    if not term_queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+    _check_expansion(expanded, max_expansion, lambda s: f"fuzzy '{s}'~{max_edits}",
+                     "raise prefix_len, lower max_edits, or raise the cap")
+    term_queries = [(qid, sorted({t for s in terms for t in expanded[s]}))
+                    for qid, terms in qmap]
     return batch_topk(spark, index_dir, term_queries, p, k=k,
                       postings=postings, **topk_kw)
+
+
+def _counts(spark: SparkSession, index_dir: str, queries, postings,
+            min_match: int = 1, attr: str | None = None) -> DataFrame:
+    """The counting kernel of ``match_counts`` and ``facet_counts``: per
+    segment it decodes only the doc-id blobs (one batched pass), unions each
+    term's fields, and keeps docs matching ≥ min(min_match, |terms|) query
+    terms — counted per ``attr`` value when given. Doc-range segments make
+    counts additive: the global count is a sum of per-segment counts."""
+    stats, qmap, _, _, hits = _prep(spark, index_dir, queries, postings, boosts=False)
+    if attr is not None:
+        _require_attrs(stats, index_dir, [attr])
+    keys = ["query_id", "value"] if attr is not None else ["query_id"]
+    schema = "query_id long, value string, n_docs long" if attr is not None \
+        else "query_id long, n_docs long"
+    if hits is None:
+        return _empty(spark, schema)
+    hits = hits.select("term", "segment", "docs_vb")
+    if attr is not None:
+        hits = hits.join(_attr_values(spark, index_dir, attr), "segment")
+
+    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+        values = _value_docs(g["vals"].iloc[0]) if attr is not None else None
+        by_term: dict[str, np.ndarray] = {}
+        for t, ids in zip(g["term"], _doc_lists(g["docs_vb"])):
+            by_term[t] = np.union1d(by_term[t], ids) if t in by_term else ids
+        rows = []
+        for qid, terms in qmap:
+            lists = [by_term[t] for t in terms if t in by_term]
+            if not lists:
+                continue
+            need = min(min_match, len(terms))
+            if need <= 1:
+                matched = lists[0] if len(lists) == 1 else np.unique(np.concatenate(lists))
+            else:
+                uniq, cnt = np.unique(np.concatenate(lists), return_counts=True)
+                matched = uniq[cnt >= need]
+            if values is None:
+                rows.append((qid, len(matched)))
+            else:
+                rows.extend((qid, v, int(np.isin(matched, ids, assume_unique=True).sum()))
+                            for v, ids in values)
+        return _frame([r for r in rows if r[-1]], schema)
+
+    return (hits.groupBy("segment").applyInPandas(kernel, schema)
+            .groupBy(*keys).agg(F.sum("n_docs").alias("n_docs")))
 
 
 def match_counts(
@@ -1549,63 +1195,11 @@ def match_counts(
     min_match: int = 1,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Total hit counts (Lucene TotalHitCountCollector): per query, how
-    many docs match — i.e. contain at least ``min_match`` distinct query
-    terms in either field → (query_id, n_docs).
-
-    Counting never scores: the kernel decodes only each matched posting
-    row's doc-id blob (tf/doclen blobs stay untouched), unions per-term
-    across fields, and for min_match=1 unions across terms; doc-range
-    segmentation makes per-segment counts additive, so the global count
-    is a plain sum and only (query, count) pairs leave each kernel. At
-    10^12 docs this is the cheapest possible full-match statistic: no
-    accumulator, no heap, no tf decode.
-    """
+    """Total hit counts (Lucene TotalHitCountCollector): docs containing ≥
+    ``min_match`` distinct query terms (either field) → (query_id, n_docs)."""
     if min_match < 1:
         raise ValueError("min_match must be >= 1")
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    if not all_terms:
-        return spark.createDataFrame([], "query_id long, n_docs long")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = (postings.select("term", "segment", "docs_vb")
-            .join(F.broadcast(t_df), "term"))
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        by_term: dict[str, np.ndarray] = {}
-        for i in range(len(g)):
-            ids = delta_decode(
-                varbyte_decode(g["docs_vb"].iloc[i]).astype(np.int64))
-            t = g["term"].iloc[i]
-            prev = by_term.get(t)
-            # union the term's field lists: a doc matching in either
-            # field counts once for that term
-            by_term[t] = ids if prev is None else np.union1d(prev, ids)
-        qids, counts = [], []
-        for qid, terms in qmap:
-            lists = [by_term[t] for t in terms if t in by_term]
-            if not lists:
-                continue
-            if min_match == 1:
-                n = len(lists[0]) if len(lists) == 1 else \
-                    len(np.unique(np.concatenate(lists)))
-            else:
-                allv = np.concatenate(lists)
-                uniq, cnt = np.unique(allv, return_counts=True)
-                n = int((cnt >= min(min_match, len(terms))).sum())
-            if n:
-                qids.append(qid)
-                counts.append(n)
-        return pd.DataFrame({"query_id": pd.Series(qids, dtype="int64"),
-                             "n_docs": pd.Series(counts, dtype="int64")})
-
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, n_docs long")
-    return (partials.groupBy("query_id")
-            .agg(F.sum("n_docs").alias("n_docs")))
+    return _counts(spark, index_dir, queries, postings, min_match)
 
 
 def facet_counts(
@@ -1615,72 +1209,10 @@ def facet_counts(
     attr: str,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Facet counts: per query, how many MATCHING docs carry each value of
-    ``attr`` (Lucene faceting) → (query_id, value, n_docs).
-
-    A doc matches when it contains any query term (either field — OR
-    semantics, the same match set batch_topk ranks). Per segment, the
-    kernel unions the query's decoded doc lists and intersects each attr
-    value's doc list (both sorted — one searchsorted per value); doc-range
-    segmentation makes counts additive across segments, so the global
-    count is a plain sum. No posting is scored and no doc row ships —
-    only (query, value, count) triples leave each kernel.
-
-    Requires ``build_index(..., attrs=(..., attr, ...))``.
-    """
-    stats_all = load_stats(index_dir)
-    if attr not in stats_all.get("attrs", []):
-        raise ValueError(
-            f"index at {index_dir} has no attribute postings for '{attr}'; "
-            f"built with attrs={stats_all.get('attrs', [])}")
-    qmap = [(int(qid), sorted({t.partition('^')[0] for t in terms}))
-            for qid, terms in queries]
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    if not all_terms:
-        return spark.createDataFrame([], "query_id long, value string, n_docs long")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    flt = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
-           .groupBy("segment")
-           .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
-    hits = (postings.select("term", "segment", "docs_vb")
-            .join(F.broadcast(t_df), "term")
-            .join(flt, "segment"))
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        vals = g["vals"].iloc[0]
-        value_docs = [(r["value"],
-                       delta_decode(varbyte_decode(r["docs_vb"])
-                                    .astype(np.int64))) for r in vals]
-        by_term: dict[str, list[np.ndarray]] = {}
-        for i in range(len(g)):
-            ids = delta_decode(
-                varbyte_decode(g["docs_vb"].iloc[i]).astype(np.int64))
-            by_term.setdefault(g["term"].iloc[i], []).append(ids)
-        qids, values, counts = [], [], []
-        for qid, terms in qmap:
-            lists = [ids for t in terms for ids in by_term.get(t, [])]
-            if not lists:
-                continue
-            matched = lists[0] if len(lists) == 1 else \
-                np.unique(np.concatenate(lists))
-            for v, ids in value_docs:
-                idx = np.searchsorted(ids, matched)
-                n = int(((idx < len(ids))
-                         & (ids[np.minimum(idx, len(ids) - 1)] == matched)).sum())
-                if n:
-                    qids.append(qid)
-                    values.append(v)
-                    counts.append(n)
-        return pd.DataFrame({"query_id": pd.Series(qids, dtype="int64"),
-                             "value": pd.Series(values, dtype="object"),
-                             "n_docs": pd.Series(counts, dtype="int64")})
-
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, value string, n_docs long")
-    return (partials.groupBy("query_id", "value")
-            .agg(F.sum("n_docs").alias("n_docs")))
+    """Facet counts (Lucene faceting): per query, the MATCHING docs (any
+    term, either field — batch_topk's match set) per value of ``attr`` →
+    (query_id, value, n_docs). Boosts are stripped; needs the attr sidecar."""
+    return _counts(spark, index_dir, queries, postings, attr=attr)
 
 
 def facet_ranges(
@@ -1691,26 +1223,18 @@ def facet_ranges(
     ranges: list[tuple],
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Range facets (the Elasticsearch ``range`` aggregation): per query,
-    how many MATCHING docs fall into each numeric bucket of ``attr`` →
-    (query_id, bucket, n_docs). Buckets are ES half-open [lo, hi) pairs,
-    MAY overlap (a doc counts in every bucket containing it), and either
-    bound may be None for an open end. Values that don't parse
-    numerically belong to no bucket.
-
-    Built on ``facet_counts``'s additivity: the attribute is
-    single-valued per doc, so a bucket's doc count is the SUM of the
-    per-value counts over the values it contains — one tiny broadcast
-    range join over the (query, value, count) facet table; nothing else
-    ships.
-    """
+    """Range facets (ES ``range`` aggregation): per query, matching docs per
+    half-open [lo, hi) bucket of ``attr`` (buckets may overlap; None = open
+    end; non-numeric values in no bucket) → (query_id, bucket, n_docs). The
+    attribute is single-valued, so a bucket count is the SUM of
+    ``facet_counts`` over its values — one tiny broadcast range join."""
     buckets = []
     for i, (lo, hi) in enumerate(ranges):
         buckets.append((i,
                         float(lo) if lo is not None else None,
                         float(hi) if hi is not None else None))
     if not buckets:
-        return spark.createDataFrame([], "query_id long, bucket int, n_docs long")
+        return _empty(spark, "query_id long, bucket int, n_docs long")
     b_df = spark.createDataFrame(buckets, "bucket int, lo double, hi double")
     fc = facet_counts(spark, index_dir, queries, attr, postings=postings)
     vd = F.col("value").cast("double")
@@ -1729,18 +1253,10 @@ def facet_stats(
     attr: str,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Stats aggregation over matching docs (the Elasticsearch ``stats``
-    agg): per query, count/min/max/sum/avg of ``attr``'s numeric value
-    over the docs matching any query term →
-    (query_id, n_docs, vmin, vmax, vsum, vavg). Docs whose value doesn't
-    parse numerically are excluded (ES skips non-numeric docs).
-
-    Derived entirely from the facet table: the attribute is
-    single-valued per doc, so every moment is a weighted sum over
-    (value, count) pairs — no doc rows ship, nothing is re-scored.
-    Values here are integer-valued doubles, so the weighted sums are
-    exact.
-    """
+    """ES ``stats`` aggregation: per query, count/min/max/sum/avg of
+    ``attr``'s numeric value over matching docs (non-numeric skipped) →
+    (query_id, n_docs, vmin, vmax, vsum, vavg), derived from the facet
+    table's (value, count) pairs (exact for integer-valued doubles)."""
     fc = facet_counts(spark, index_dir, queries, attr, postings=postings)
     vd = F.col("value").cast("double")
     num = fc.filter(vd.isNotNull())
@@ -1763,23 +1279,12 @@ def more_like_this(
     n_terms: int = 5,
     **topk_kw,
 ) -> DataFrame:
-    """Lucene MoreLikeThis: find docs similar to the given ones.
-
-    Per source doc, its ``n_terms`` most distinctive BODY terms by
-    tf × idf (idf = the index's own BM25 idf from posting metadata — the
-    same quantity the ranking uses; ties term-asc) form an OR query
-    through ``batch_topk``; the source doc is excluded from its own
-    results, with ranks closed up. → (query_id=source doc_id, rank,
-    doc_id, score).
-
-    The term-selection inputs are tiny (|doc_ids| docs × their vocab, and
-    df metadata for just those terms), so selection runs driver-side with
-    the scalar-libm idf — keeping the picked terms bit-consistent with
-    the SQL oracle; everything that scales (the search) stays the
-    distributed batch path. Extra kwargs pass through to ``batch_topk``.
-    """
-    from dlkp_spark.config import FIELD_BODY
-
+    """Lucene MoreLikeThis. Per source doc, its ``n_terms`` most distinctive
+    BODY terms by tf × idf (the index's BM25 idf; ties term-asc) form an OR
+    query through ``batch_topk``; the source is excluded from its own
+    results → (query_id=source doc_id, rank, doc_id, score). Term selection
+    is tiny and runs driver-side with the scalar idf, so picked terms match
+    the SQL oracle. Extra kwargs pass to ``batch_topk``."""
     p = p or BM25Params()
     k = k or p.k
     stats = load_stats(index_dir)
@@ -1806,18 +1311,10 @@ def more_like_this(
         if qterms:
             queries.append((d, qterms))
     if not queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    # k+1 then drop the source: it can occupy at most one slot, so the
-    # exclusion happens before the FINAL truncation — no similar doc is
-    # ever displaced by the source itself
+        return _empty(spark)
+    # k+1, then drop the source (at most one slot) before the final cut
     hits = batch_topk(spark, index_dir, queries, p, k + 1, **topk_kw)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (hits.filter(F.col("doc_id") != F.col("query_id"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return _rank(hits.filter(F.col("doc_id") != F.col("query_id")), k)
 
 
 def explain_scores(
@@ -1828,71 +1325,23 @@ def explain_scores(
     p: BM25Params | None = None,
     postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Lucene ``explain``: the per-(query, doc, term, field) score
-    breakdown for the given docs → (query_id, doc_id, term, field, tf,
-    df, contribution), where Σ contribution over a (query, doc) is exactly
-    that doc's ``batch_topk`` score (same decode, same float expressions).
-
-    Only the doc-range segments covering ``doc_ids`` are touched (segment
-    = doc_id // segment_docs prunes at the scan), so explaining a handful
-    of hits reads a handful of posting rows regardless of index size.
-    """
+    """Lucene ``explain`` → (query_id, doc_id, term, field, tf, df,
+    contribution) for the given docs; Σ contribution over a (query, doc) is
+    exactly its ``batch_topk`` score (same decode, same float expressions).
+    Boosts are stripped. Only the segments covering ``doc_ids`` are read."""
     p = p or BM25Params()
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    seg_docs = int(stats_all.get("segment_docs") or 0)
+    stats, qmap, _, _, hits = _prep(spark, index_dir, queries, postings, boosts=False)
+    seg_docs = int(stats.get("segment_docs") or 0)
     if not seg_docs:
         raise ValueError(f"{index_dir}: stats.json has no segment_docs")
     wanted = np.asarray(sorted({int(d) for d in doc_ids}), dtype=np.int64)
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
-    all_terms = sorted({t for _, ts in qmap for t in ts})
-    schema = ("query_id long, doc_id long, term string, field int, "
-              "tf long, df long, contribution double")
-    if not all_terms or not len(wanted):
-        return spark.createDataFrame([], schema)
+    if hits is None or not len(wanted):
+        return _empty(spark, _EXPLAIN)
     segs = sorted({int(d) // seg_docs for d in wanted})
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = (postings.filter(F.col("segment").isin(segs))
-            .join(F.broadcast(t_df), "term"))
-
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
-        lists = _decode_group(g, stats, p)
-        # tf values ride along for the breakdown (decode again is cheap
-        # here — explain touches a handful of rows)
-        tfs = [decode_postings_batch([g["docs_vb"].iloc[i]],
-                                     [g["tfs_vb"].iloc[i]],
-                                     [g["dls_vb"].iloc[i]])[1]
-               for i in range(len(g))]
-        dfv = g["df"].to_numpy()
-        out = {k: [] for k in ("query_id", "doc_id", "term", "field",
-                               "tf", "df", "contribution")}
-        for qid, terms in qmap:
-            for i, lst in enumerate(lists):
-                if lst["term"] not in terms:
-                    continue
-                mask = np.isin(lst["docs"], wanted)
-                if not mask.any():
-                    continue
-                contrib = lst["boost"] * lst["contribs"][mask]
-                for d, t_, c in zip(lst["docs"][mask],
-                                    tfs[i][np.flatnonzero(mask)], contrib):
-                    out["query_id"].append(qid)
-                    out["doc_id"].append(int(d))
-                    out["term"].append(lst["term"])
-                    out["field"].append(lst["field"])
-                    out["tf"].append(int(t_))
-                    out["df"].append(int(dfv[i]))
-                    out["contribution"].append(float(c))
-        return pd.DataFrame(out) if out["doc_id"] else pd.DataFrame(
-            {k: pd.Series([], dtype=dt) for k, dt in
-             [("query_id", "int64"), ("doc_id", "int64"), ("term", "object"),
-              ("field", "int32"), ("tf", "int64"), ("df", "int64"),
-              ("contribution", "float64")]})
-
-    return hits.groupBy("segment").applyInPandas(kernel, schema)
+    kernel = _make_batch_kernel(qmap, stats, p, 0, stats.get("block_size", 64),
+                                scoped=False, emit=partial(_explain_rows, wanted=wanted),
+                                schema=_EXPLAIN)
+    return _score(hits.filter(F.col("segment").isin(segs)), kernel, schema=_EXPLAIN)
 
 
 def two_wave_pair_counts(
@@ -1903,65 +1352,28 @@ def two_wave_pair_counts(
     k: int | None = None,
     wave1_segments: int = 1,
 ) -> dict:
-    """Diagnostic replay of batch_topk(two_wave=True)'s pruning decision:
-    returns {"pairs_total", "pairs_scored", "pairs_skipped",
-    "postings_total", "postings_scored"} — how many (query, segment)
-    pairs the upper-bound gate dropped, and the posting-entry volume
-    behind them (Σ n_postings of each pair's matched lists, from index
-    METADATA only). The postings ratio is the scale-transferable number:
-    per-pair decode+score work is what dominates at 10^12 docs, while
-    local wall-clock at bench scale is mostly fixed per-stage constants
-    (see BASELINE.md round-5 notes). Runs the same wave-1 kernel to obtain
-    the exact thresholds, so counts match what the query path actually
-    skips (used by tests + the bench demonstration)."""
+    """Replay of batch_topk(two_wave=True)'s pruning → {"pairs_total",
+    "pairs_scored", "pairs_skipped", "postings_total", "postings_scored"}:
+    the (query, segment) pairs the bound dropped and the posting volume
+    behind them (metadata only; the scale-transferable number). It builds
+    batch_topk's own plan (``_two_wave``, boosts included), so the counts
+    match what the query path skips."""
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    block_size_meta = stats_all.get("block_size", 64)
-    qmap = [(qid, sorted(set(terms))) for qid, terms in queries]
-    pair_rows = [(qid, t) for qid, terms in qmap for t in terms]
-    qt_df = spark.createDataFrame(pair_rows, "query_id long, term string")
-    postings = load_postings(spark, index_dir)
-    t_df = spark.createDataFrame(
-        [(t,) for t in sorted({t for _, ts in qmap for t in ts})], "term string")
-    hits = postings.join(F.broadcast(t_df), "term")
-    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
-    ub = (postings.select("term", "field", "segment", "max_contrib", "n_postings")
-          .join(F.broadcast(qt_df), "term")
-          .groupBy("query_id", "segment")
-          .agg(F.sum(F.col("max_contrib") * boost).alias("ub"),
-               F.sum("n_postings").alias("np"))
-          .persist())
-    try:
-        tot = ub.agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s")).collect()[0]
-        uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
-        w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
-                    .filter(F.col("rn") <= wave1_segments)
-                    .select("query_id", "segment", "np"))
-        kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=True)
-        w1 = _scoped_partials(hits, w1_pairs.drop("np"), kernel)
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
-        theta = (w1.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") == k)
-                 .select("query_id", F.col("score").alias("theta")))
-        agg1 = w1_pairs.agg(F.count(F.lit(1)).alias("c"),
-                            F.sum("np").alias("s")).collect()[0]
-        agg2 = (ub.join(w1_pairs.select("query_id", "segment")
-                        .withColumn("w1", F.lit(True)),
-                        ["query_id", "segment"], "left")
-                .filter(F.col("w1").isNull())
-                .join(theta, "query_id", "left")
-                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-                .agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s"))
-                .collect()[0])
-    finally:
-        ub.unpersist()
-    scored = int(agg1["c"]) + int(agg2["c"])
-    return {"pairs_total": int(tot["c"]), "pairs_scored": scored,
-            "pairs_skipped": int(tot["c"]) - scored,
-            "postings_total": int(tot["s"] or 0),
-            "postings_scored": int(agg1["s"] or 0) + int(agg2["s"] or 0)}
+    stats, qmap, qweights, postings, hits = _prep(spark, index_dir, queries)
+    if hits is None:
+        return dict.fromkeys(("pairs_total", "pairs_scored", "pairs_skipped",
+                              "postings_total", "postings_scored"), 0)
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=True, qweights=qweights)
+    ub, w1_pairs, _, w2_pairs = _two_wave(spark, postings, hits, qmap, qweights,
+                                          p, k, wave1_segments, kernel)
+    (n, s), (n1, s1), (n2, s2) = [
+        (int(r["c"]), int(r["s"] or 0)) for r in (
+            f.agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s")).collect()[0]
+            for f in (ub, w1_pairs, w2_pairs))]
+    return {"pairs_total": n, "pairs_scored": n1 + n2, "pairs_skipped": n - n1 - n2,
+            "postings_total": s, "postings_scored": s1 + s2}
 
 
 def wand_topk_treereduce(
@@ -1971,38 +1383,18 @@ def wand_topk_treereduce(
     p: BM25Params | None = None,
     k: int | None = None,
 ) -> list[tuple[int, int, float]]:
-    """Single-query top-k with an explicit treeReduce heap merge
-    (north_star: "treeReduce heap merge"; reference analog: distributed
-    gather, extraction/trainer.py:53-75). Returns [(rank, doc_id, score)].
-    """
+    """Single-query top-k with the treeReduce heap merge (north star): the
+    scoring kernel's ≤ k partial rows per segment merge by
+    ``RDD.treeAggregate`` + ``merge_topk``; no posting row reaches per-row
+    Python. → [(rank, doc_id, score)]."""
     p = p or BM25Params()
     k = k or p.k
-    stats = load_stats(index_dir)
-    block_size_meta = stats.get("block_size", 64)
-    stats = {"n_docs": stats["n_docs"], "avgdl": stats["avgdl"]}
-    uniq = sorted(set(terms))
-
-    # repartition by segment so every posting list of a segment is
-    # colocated — the kernel scores docs fully only with all of the
-    # query's lists for that doc range present
-    postings = (load_postings(spark, index_dir)
-                .filter(F.col("term").isin(uniq))
-                .repartition("segment"))
-
-    def seq_op(acc: list, rows: list) -> list:
-        return merge_topk(acc + rows, k)
-
-    def per_part(it):
-        pdf_rows = list(it)
-        if not pdf_rows:
-            return iter([[]])
-        g = pd.DataFrame([r.asDict() for r in pdf_rows])
-        out = []
-        for _seg, seg_g in g.groupby("segment", sort=False):
-            lists = _decode_group(seg_g, stats, p)
-            out.extend(exact_topk_lists(lists, k, block_size_meta))
-        return iter([merge_topk(out, k)])
-
-    partial_rdd = postings.rdd.mapPartitions(per_part)
-    top = partial_rdd.treeAggregate([], seq_op, lambda a, b: merge_topk(a + b, k), depth=2)
-    return [(i + 1, d, s) for i, (d, s) in enumerate(merge_topk(top, k))]
+    stats, qmap, qweights, _, hits = _prep(spark, index_dir, [(0, list(terms))])
+    if hits is None:
+        return []
+    kernel = _make_batch_kernel(qmap, stats, p, k, stats.get("block_size", 64),
+                                scoped=False, qweights=qweights)
+    top = _score(hits, kernel).select("doc_id", "score").rdd.treeAggregate(
+        [], lambda acc, r: merge_topk(acc + [(r[0], r[1])], k),
+        lambda a, b: merge_topk(a + b, k), depth=2)
+    return [(i + 1, d, s) for i, (d, s) in enumerate(top)]

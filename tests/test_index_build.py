@@ -212,3 +212,35 @@ def test_block_max_admissible_end_to_end(spark, index_dir, oracle_idx):
         for i, c in enumerate(contribs):
             assert r["block_max"][i // CFG.block_size] >= c
         assert np.isclose(r["max_contrib"], contribs.max())
+
+
+def test_listing_cache_bypassed_when_mtimes_unreadable(spark, tmp_path, monkeypatch):
+    """A dataset path os.stat cannot see (an object store) has no listing
+    fingerprint: every load lists afresh, so a rewrite at the same path is
+    never served from a stale cached listing."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dlkp_spark.index import build as build_mod
+
+    seg = tmp_path / "idx" / "segments"
+    seg.mkdir(parents=True)
+    pq.write_table(pa.table({"term": ["a", "b"]}), str(seg / "part-0.parquet"))
+    real_stat = os.stat
+
+    def blind_stat(p, *a, **kw):
+        if str(p).startswith(str(seg)):
+            raise OSError("not visible to os.stat")
+        return real_stat(p, *a, **kw)
+
+    monkeypatch.setattr(build_mod.os, "stat", blind_stat)
+    first = load_postings(spark, str(tmp_path / "idx"))
+    assert first.count() == 2
+    shutil.rmtree(seg)
+    seg.mkdir()
+    pq.write_table(pa.table({"term": ["a", "b", "c"]}), str(seg / "part-1.parquet"))
+    second = load_postings(spark, str(tmp_path / "idx"))
+    assert second is not first
+    assert sorted(r["term"] for r in second.collect()) == ["a", "b", "c"]

@@ -14,7 +14,7 @@ from dlkp_spark.corpus import generate_web_pages
 from dlkp_spark.index.build import build_index, prepare_docs
 from dlkp_spark.oracle import bm25_topk, build_oracle_index, reference_query_set
 from dlkp_spark.query.bm25 import exact_topk
-from dlkp_spark.query.wand import wand_topk, wand_topk_treereduce
+from dlkp_spark.query.wand import batch_topk, wand_topk, wand_topk_treereduce
 
 N_DOCS = 300
 K = 10
@@ -86,8 +86,6 @@ def test_wand_path_bit_identical(spark, index_dir, oracle_results):
 
 
 def test_batch_taat_path_bit_identical(spark, index_dir, oracle_results):
-    from dlkp_spark.query.wand import batch_topk
-
     got_rows = batch_topk(spark, index_dir, QUERIES, BM25Params(), k=K).collect()
     by_q = {}
     for r in got_rows:

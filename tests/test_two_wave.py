@@ -91,6 +91,19 @@ def test_two_wave_skips_segments_on_selective_query(spark, skew_index):
     assert one == two
 
 
+def test_two_wave_pair_counts_parse_boosts(spark, skew_index):
+    """A boosted term counts the same (query, segment) pairs and postings
+    as the bare term, and its weighted upper bound still prunes."""
+    for terms in (["goldterm", "filler"], ["goldterm"]):
+        bare = two_wave_pair_counts(spark, skew_index, [(0, terms)],
+                                    BM25Params(), k=5)
+        boosted = two_wave_pair_counts(
+            spark, skew_index, [(0, ["goldterm^2"] + terms[1:])], BM25Params(), k=5)
+        assert boosted["pairs_total"] == bare["pairs_total"] > 0, (bare, boosted)
+        assert boosted["postings_total"] == bare["postings_total"], (bare, boosted)
+        assert boosted["pairs_skipped"] > 0, boosted
+
+
 def test_two_wave_fewer_than_k_results_unpruned(spark, skew_index):
     # a query with < k total hits must not lose rows to pruning (no theta)
     queries = [(0, ["w3"])]
